@@ -86,7 +86,11 @@ def _sliding_concat(toks: Column, n: int, num) -> Column:
 
 
 def _shingles(text_col: str, n: int) -> Column:
-    """Word n-gram shingle array of the lowercased text (distinct)."""
+    """Word n-gram shingle array of the lowercased text (distinct).
+
+    NULL text has no shingles: the array is NULL (a document's
+    ``explode_outer`` then yields one NULL shingle row), pinned by
+    test_sliding_concat_matches_transform_slice_reference."""
     toks = normalized_tokens(text_col)
     num = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
     return F.array_distinct(_sliding_concat(toks, n, num))

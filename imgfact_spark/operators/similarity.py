@@ -309,7 +309,7 @@ def ivf_train_centroids(
     seed: int = 42,
     deterministic: bool = False,
     prepared: bool = False,
-    max_driver_train_rows: int = 200_000,
+    max_driver_train_elements: int = 200_000 * 64,
 ) -> np.ndarray:
     """Spherical k-means coarse quantizer for IVF (the second ANN scale
     path next to LSH; FAISS-style IVF over a DataFrame).
@@ -320,8 +320,10 @@ def ivf_train_centroids(
     the internal projection + snapshot.
 
     Fast mode trains DRIVER-SIDE when the corpus fits
-    ``max_driver_train_rows`` (same 200k × 64-float ≈ 110 MB bound as the
-    broadcast-small query contract): coarse-quantizer training is the one
+    ``max_driver_train_elements`` vector elements (rows × ``dim``; the
+    default 200k × 64 floats ≈ 110 MB is the broadcast-small query
+    contract, so a 1024-d corpus trains on the driver only up to 12.5k
+    rows): coarse-quantizer training is the one
     stage whose input is routinely sample-sized — FAISS trains IVF on a
     driver/GPU sample even for billion-vector indexes — and the
     distributed loop's n_iters sequential job barriers (assign → explode →
@@ -362,8 +364,9 @@ def ivf_train_centroids(
     # (id, vec) projection only.
     proj = corpus if prepared else corpus.select(id_col, vec_col)
     if not deterministic:
-        # bounded probe-collect: ≤ max+1 rows ever reach the driver; a
-        # corpus past the bound falls through to the distributed loop.
+        # bounded probe-collect: ≤ max_rows+1 rows (≤ the element bound
+        # plus one row) ever reach the driver; a corpus past the bound
+        # falls through to the distributed loop.
         # Arrow transfer (toPandas), NOT collect(): row-based collect of
         # 150k array<float> rows measured ~30 s of pure driver
         # deserialization — more than the whole distributed loop — while
@@ -371,14 +374,11 @@ def ivf_train_centroids(
         # for driver transfers").  The probe runs BEFORE any snapshot so
         # the driver-trained common case never pays a corpus
         # materialization it would not reuse.
-        pdf = (
-            proj.select(id_col, vec_col)
-            .limit(max_driver_train_rows + 1)
-            .toPandas()
-        )
+        max_rows = max_driver_train_elements // dim
+        pdf = proj.select(id_col, vec_col).limit(max_rows + 1).toPandas()
         if len(pdf) == 0:
             raise ValueError("ivf_train_centroids: empty corpus")
-        if len(pdf) <= max_driver_train_rows:
+        if len(pdf) <= max_rows:
             ids = pdf[id_col].tolist()
             mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
             return _train_centroids_numpy_fast(ids, mat, n_cells, n_iters, seed)

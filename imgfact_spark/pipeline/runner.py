@@ -13,13 +13,23 @@ Stage DAG (SURVEY.md §3.1):
                               └─ groundings scored+filtered+topK (M2/M3/W1)
                                    └─ canonicalized kg_triples / kg_groundings
 
+The dataflow is defined ONCE, as a per-document half
+(:func:`document_stages`) and a corpus-global half (:func:`kg_stages`).
+Both take a stage wrapper ``run_stage(name, compute, partition_by=None,
+shared=False, keep=None)``: ``shared`` marks a fan-out point, ``keep`` the
+columns downstream reads (an uncommitted stage is narrowed to them).
+:func:`run_pipeline` passes one that commits or persists; the incremental
+path (``streaming.incremental_extract`` / ``incremental_kg_tables``) passes
+:func:`lazy_stage`, per micro-batch and over the extraction logs.
+
 Checkpointing is a granularity knob (``PipelineConfig.checkpoint``):
   * ``"all"``   — every stage is a committed table; a killed job resumes
                   from the last finished stage (reference semantics:
                   skip-finished-chunks, inference.py:139-143).
   * ``"final"`` — only kg_triples / kg_groundings are materialized; the
                   intermediate DAG stays one fused Catalyst plan (shared
-                  fan-out points are persisted in memory+disk and released
+                  fan-out points and the narrow media/candidates
+                  projections are persisted in memory+disk and released
                   at the end).  Maximum throughput when resume granularity
                   isn't needed.
 """
@@ -89,6 +99,11 @@ class PipelineResult:
 
 _FINAL_STAGES = {"kg_triples", "kg_groundings"}
 
+#: The columns of ``media`` / ``candidates`` that downstream stages read
+#: (pos / media_p / img_no are provenance, kept only in committed tables).
+MEDIA_COLS = ("doc_id", "media_ref", "subset", "media_s", "media_o")
+CANDIDATE_COLS = ("doc_id", "s", "p", "o")
+
 
 def run_pipeline(
     spark: SparkSession,
@@ -118,14 +133,14 @@ def run_pipeline(
     fp = f"{input_fp}:{_config_fingerprint(cfg)}"
     persisted: list[DataFrame] = []
 
-    def _stage(name, compute, partition_by=None, shared=False):
+    def _stage(name, compute, partition_by=None, shared=False, keep=None):
         if cfg.checkpoint == "all" or name in _FINAL_STAGES:
             return stage(
                 store, name, fp, compute, spark,
                 partition_by=partition_by, stats=cfg.lineage_stats,
             )
-        df = compute()
-        if shared:
+        df = lazy_stage(name, compute, keep=keep)
+        if shared or keep:
             df = df.persist()
             persisted.append(df)
         return df
@@ -136,35 +151,63 @@ def run_pipeline(
     else:
         documents_stable = documents
 
-    # spans is NOT persisted in final mode: its two consumers (media,
-    # mentions) read disjoint subsets, so caching the exploded rows costs
-    # more memory bandwidth than re-scanning the compressed parquet source.
-    spans = _stage("spans", lambda: ingest.explode_spans(documents_stable))
-    media_full = _stage("media", lambda: ingest.media_spans(spans))
-    if cfg.checkpoint == "final":
-        # persist only the columns downstream consumers read: pos/media_p/
-        # img_no are provenance, kept in the committed table ('all' mode)
-        # but dead weight in the hot cache.
-        media = media_full.select(
-            "doc_id", "media_ref", "subset", "media_s", "media_o"
-        ).persist()
-        persisted.append(media)
-    else:
-        media = media_full
-    mentions = _stage("mentions", lambda: extract.detect_mentions(spans, rel2desc))
-    candidates_full = _stage(
+    stages = document_stages(_stage, documents_stable, rel2desc, kb_entities, cfg)
+    stages.update(kg_stages(_stage, stages["media"], stages["candidates"], cfg))
+
+    for df in persisted:
+        df.unpersist()
+
+    return PipelineResult(
+        kg_triples=stages.pop("kg_triples"),
+        kg_groundings=stages.pop("kg_groundings"),
+        stages=stages,
+    )
+
+
+def lazy_stage(name, compute, partition_by=None, shared=False, keep=None):
+    """Pass-through stage wrapper: nothing is committed or persisted; a
+    stage with ``keep`` is narrowed to those columns."""
+    df = compute()
+    return df.select(*keep) if keep else df
+
+
+def document_stages(
+    run_stage, documents: DataFrame, rel2desc: DataFrame, kb_entities: DataFrame,
+    cfg: PipelineConfig,
+) -> dict[str, DataFrame]:
+    """Per-document half of the dataflow: span explode → media parse →
+    mention detection → entity linking.  Every output row depends on one
+    document only, so the half runs equally over a whole corpus or one
+    arriving micro-batch.  → {spans, media, mentions, candidates}"""
+    # spans is never shared: its two consumers (media, mentions) read
+    # disjoint subsets, so caching the exploded rows costs more memory
+    # bandwidth than re-scanning the compressed parquet source.
+    spans = run_stage("spans", lambda: ingest.explode_spans(documents))
+    media = run_stage("media", lambda: ingest.media_spans(spans), keep=MEDIA_COLS)
+    mentions = run_stage("mentions", lambda: extract.detect_mentions(spans, rel2desc))
+    candidates = run_stage(
         "candidates",
         lambda: extract.link_entities(
             mentions, kb_entities, broadcast_dim=cfg.broadcast_entity_dims
-        )
+        ),
+        keep=CANDIDATE_COLS,
     )
-    if cfg.checkpoint == "final":
-        candidates = candidates_full.select("doc_id", "s", "p", "o").persist()
-        persisted.append(candidates)
-    else:
-        candidates = candidates_full
-    # `visual` feeds two consumers (the candidate gate and the fused ratio),
-    # so in final mode it is persisted; it is entity-dimension-sized.
+    return {"spans": spans, "media": media, "mentions": mentions, "candidates": candidates}
+
+
+def kg_stages(
+    run_stage, media: DataFrame, candidates: DataFrame, cfg: PipelineConfig
+) -> dict[str, DataFrame]:
+    """Corpus-global half of the dataflow: visual entity gate → visual
+    triples → relation whitelist → grounding score/threshold/top-K →
+    canonical rewrite → kg_triples / kg_groundings.  Each gate aggregates
+    evidence over the whole corpus, so the half is recomputed over every
+    document seen so far.  → {visual_entities, visual_candidates,
+    whitelisted_candidates, groundings, [aliases], kg_triples,
+    kg_groundings}"""
+
+    # `visual` feeds two consumers (the candidate gate and the fused
+    # ratio); it is entity-dimension-sized.
     def _visual():
         if cfg.entity_gate == "checkpoint":
             from imgfact_spark.pipeline import model_serving
@@ -179,8 +222,8 @@ def run_pipeline(
             media, cfg.min_evidence, cfg.vcc_threshold, hash_mode=cfg.hash_mode
         )
 
-    visual = _stage("visual_entities", _visual, shared=True)
-    vis_cand = _stage(
+    visual = run_stage("visual_entities", _visual, shared=True)
+    vis_cand = run_stage(
         "visual_candidates",
         lambda: entity_filter.filter_visual_triples(
             candidates, visual, broadcast_dim=cfg.broadcast_entity_dims
@@ -200,7 +243,7 @@ def run_pipeline(
         wl = relation_filter.select_relations(ratio, min_count=cfg.relation_min_count)
         return relation_filter.apply_relation_whitelist(vis_cand, wl)
 
-    wl_cand = _stage("whitelisted_candidates", _whitelisted, shared=True)
+    wl_cand = run_stage("whitelisted_candidates", _whitelisted, shared=True)
 
     def _groundings():
         gc = grounding.grounding_candidates(wl_cand, media)
@@ -223,7 +266,13 @@ def run_pipeline(
         )
         return grounding.topk_groundings(filtered, cfg.topk)
 
-    grounded = _stage("groundings", _groundings)
+    grounded = run_stage("groundings", _groundings)
+    out = {
+        "visual_entities": visual,
+        "visual_candidates": vis_cand,
+        "whitelisted_candidates": wl_cand,
+        "groundings": grounded,
+    }
 
     # Alias resolution: with LSH edges the map is a real table (components
     # can merge distinct canonical forms); without LSH it IS
@@ -234,16 +283,15 @@ def run_pipeline(
             ents = canon.observed_entities(wl_cand)
             return canon.alias_map(ents, with_lsh=True)
 
-        aliases = _stage("aliases", _aliases, shared=True)
+        aliases = out["aliases"] = run_stage("aliases", _aliases, shared=True)
         _rewrite = lambda df: canon.rewrite_triples(
             df, aliases, broadcast_dim=cfg.broadcast_entity_dims
         )
     else:
-        aliases = None
         _rewrite = canon.rewrite_triples_norm
 
     def _kg_triples():
-        rewritten = _rewrite(wl_cand.select("doc_id", "s", "p", "o"))
+        rewritten = _rewrite(wl_cand.select(*CANDIDATE_COLS))
         return (
             rewritten.groupBy("s", "p", "o")
             .agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -263,9 +311,9 @@ def run_pipeline(
             "s", "p", "o", "media_ref", "doc_id", "score", "rank", "subset"
         )
 
-    # The two final tables are written CONCURRENTLY: their query DAGs are
-    # independent above the shared persisted inputs (wl_cand/media), so
-    # overlapping them hides each other's AQE query-stage scheduling gaps,
+    # The two final tables are built CONCURRENTLY: their query DAGs are
+    # independent above the shared inputs (wl_cand/media), so overlapping
+    # their writes hides each other's AQE query-stage scheduling gaps,
     # commit latency and straggler tails (measured ~3s of the pipeline's
     # fixed cost at bench scale).  Spark's job scheduler interleaves the
     # two jobs; concurrent first-touch of a cached partition is serialized
@@ -273,30 +321,8 @@ def run_pipeline(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_triples = pool.submit(
-            _stage, "kg_triples", _kg_triples, ["subset"]
-        )
-        f_groundings = pool.submit(
-            _stage, "kg_groundings", _kg_groundings, ["subset"]
-        )
-        kg_triples = f_triples.result()
-        kg_groundings = f_groundings.result()
-
-    for df in persisted:
-        df.unpersist()
-
-    return PipelineResult(
-        kg_triples=kg_triples,
-        kg_groundings=kg_groundings,
-        stages={
-            "spans": spans,
-            "media": media_full,
-            "mentions": mentions,
-            "candidates": candidates_full,
-            "visual_entities": visual,
-            "visual_candidates": vis_cand,
-            "whitelisted_candidates": wl_cand,
-            "groundings": grounded,
-            **({"aliases": aliases} if aliases is not None else {}),
-        },
-    )
+        f_triples = pool.submit(run_stage, "kg_triples", _kg_triples, ["subset"])
+        f_groundings = pool.submit(run_stage, "kg_groundings", _kg_groundings, ["subset"])
+        out["kg_triples"] = f_triples.result()
+        out["kg_groundings"] = f_groundings.result()
+    return out

@@ -71,37 +71,35 @@ def incremental_extract(
     await_termination: bool = True,
 ):
     """Incremental KG extraction: per arriving document micro-batch, run
-    the DOC-LOCAL pipeline stages (span explode → media parse → mention
-    detection → entity linking) once and append the results to two logs —
+    the per-document half of the pipeline dataflow
+    (:func:`~imgfact_spark.pipeline.runner.document_stages`: span explode →
+    media parse → mention detection → entity linking) once and append its
+    narrow media / candidates projections to two logs —
     ``{work_dir}/media_log`` and ``{work_dir}/candidates_log``.
 
     The expensive per-document work (regex matching, dictionary linking)
-    thus happens EXACTLY ONCE per document; the corpus-global layer (gates,
+    thus happens EXACTLY ONCE per document; the corpus-global half (gates,
     whitelist, aggregation) is recomputed over the append-only logs by
     :func:`incremental_kg_tables` — cheap relative to extraction, and the
     classic incremental-extract / recompute-reduce design when no lakehouse
     MERGE is available.  Exactly-once per batch via foreachBatch + the
     stream checkpoint.
     """
-    from imgfact_spark.pipeline import extract, ingest
+    from imgfact_spark.pipeline.runner import PipelineConfig, document_stages, lazy_stage
 
     docs = stream_documents(spark, input_dir)
+    cfg = PipelineConfig()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spans = ingest.explode_spans(batch_df)
-        media = ingest.media_spans(spans)
-        mentions = extract.detect_mentions(spans, rel2desc)
-        cand = extract.link_entities(mentions, kb_entities)
+        out = document_stages(lazy_stage, batch_df, rel2desc, kb_entities, cfg)
         # idempotent per-batch writes: foreachBatch is at-least-once on
         # retry, so each batch overwrites ITS OWN directory (batch_id=N
         # becomes a discovered partition column downstream) instead of
         # appending — a replayed batch replaces itself, never duplicates.
-        media.select(
-            "doc_id", "media_ref", "subset", "media_s", "media_o"
-        ).write.mode("overwrite").parquet(f"{work_dir}/media_log/batch_id={batch_id}")
-        cand.select("doc_id", "s", "p", "o").write.mode("overwrite").parquet(
-            f"{work_dir}/candidates_log/batch_id={batch_id}"
-        )
+        for name in ("media", "candidates"):
+            out[name].write.mode("overwrite").parquet(
+                f"{work_dir}/{name}_log/batch_id={batch_id}"
+            )
 
     q = (
         docs.writeStream.foreachBatch(process)
@@ -117,60 +115,27 @@ def incremental_extract(
 def incremental_kg_tables(spark: SparkSession, work_dir: str, cfg=None):
     """Current kg_triples / kg_groundings views over the incremental logs.
 
-    Applies the SAME corpus-global chain as the batch runner (visual gates
-    → relation whitelist → grounding scores/thresholds/top-K → canonical
-    rewrite) to the accumulated extraction logs; the parity test pins this
+    Runs the corpus-global half of the pipeline dataflow
+    (:func:`~imgfact_spark.pipeline.runner.kg_stages`: visual gates →
+    relation whitelist → grounding scores/thresholds/top-K → canonical
+    rewrite) — the one the batch runner runs, with every ``cfg`` dispatch —
+    lazily over the accumulated extraction logs; the parity test pins this
     equal to ``run_pipeline`` over the full corpus.  Correctness note:
     distinct-media evidence composes across batches because media_refs are
     globally unique per document occurrence (new docs bring new refs).
     """
-    from imgfact_spark.pipeline import canonicalize as canon
-    from imgfact_spark.pipeline import entity_filter, grounding, relation_filter
-    from imgfact_spark.pipeline.runner import PipelineConfig
-
-    cfg = cfg or PipelineConfig()
-    media = spark.read.parquet(f"{work_dir}/media_log")
-    candidates = spark.read.parquet(f"{work_dir}/candidates_log")
-
-    visual = entity_filter.visual_entities(
-        media, cfg.min_evidence, cfg.vcc_threshold, hash_mode=cfg.hash_mode
-    )
-    vis_cand = entity_filter.filter_visual_triples(
-        candidates, visual, broadcast_dim=cfg.broadcast_entity_dims
-    )
-    ratio = relation_filter.visual_relation_ratio(
-        vis_cand, candidates, min_total=cfg.relation_min_total
-    )
-    wl = relation_filter.select_relations(ratio, min_count=cfg.relation_min_count)
-    wl_cand = relation_filter.apply_relation_whitelist(vis_cand, wl)
-
-    gc = grounding.grounding_candidates(wl_cand, media)
-    scored = (
-        grounding.score_groundings_model_sim(gc)
-        if cfg.scoring == "model_sim"
-        else grounding.score_groundings(gc, hash_mode=cfg.hash_mode)
-    )
-    grounded = grounding.topk_groundings(
-        grounding.filter_groundings(scored, cfg.pair_threshold, cfg.ent_threshold),
-        cfg.topk,
+    from imgfact_spark.pipeline.runner import (
+        CANDIDATE_COLS,
+        MEDIA_COLS,
+        PipelineConfig,
+        kg_stages,
+        lazy_stage,
     )
 
-    rewritten = canon.rewrite_triples_norm(wl_cand.select("doc_id", "s", "p", "o"))
-    kg_triples = (
-        rewritten.groupBy("s", "p", "o")
-        .agg(F.countDistinct("doc_id").alias("n_docs"))
-        .withColumn(
-            "subset",
-            F.format_string(
-                "Triplelist%03d",
-                F.pmod(F.xxhash64("s", "p", "o"), F.lit(cfg.n_subset_partitions)) + 1,
-            ),
-        )
-    )
-    kg_groundings = canon.rewrite_triples_norm(grounded).select(
-        "s", "p", "o", "media_ref", "doc_id", "score", "rank", "subset"
-    )
-    return kg_triples, kg_groundings
+    media = spark.read.parquet(f"{work_dir}/media_log").select(*MEDIA_COLS)
+    candidates = spark.read.parquet(f"{work_dir}/candidates_log").select(*CANDIDATE_COLS)
+    out = kg_stages(lazy_stage, media, candidates, cfg or PipelineConfig())
+    return out["kg_triples"], out["kg_groundings"]
 
 
 def sessionize_events_batch(
@@ -457,10 +422,41 @@ def incremental_lsh_dedup(
     — the index store is append-only, never rewritten.  Idempotent on
     foreachBatch retry: each batch overwrites its own batch_id=N
     partition, exactly like :func:`incremental_extract`.
+
+    Band values are only comparable under the hash family (and banding
+    parameters) they were computed with, so the first batch stamps them in
+    ``{work_dir}/index_family.json``; a later run whose family differs —
+    e.g. a :data:`~imgfact_spark.operators.dedup.MINHASH_FAMILY_VERSION`
+    bump — or an index without a stamp raises instead of re-admitting
+    every historical duplicate.  Rebuild the index to recover.
     """
+    import json
+    import os
+
     from pyspark.sql import types as T
 
-    from imgfact_spark.operators.dedup import dedup_against_index
+    from imgfact_spark.operators.dedup import MINHASH_FAMILY_VERSION, dedup_against_index
+
+    index_path = f"{work_dir}/index"
+    stamp_path = f"{work_dir}/index_family.json"
+    family = {
+        "hash_mode": hash_mode,
+        # md5 (oracle) mode is engine-pinned and unversioned
+        "minhash_family_version": MINHASH_FAMILY_VERSION if hash_mode == "xxhash64" else None,
+        "n": n, "num_hashes": num_hashes, "bands": bands, "rows_per_band": rows_per_band,
+    }
+    if os.path.exists(stamp_path):
+        with open(stamp_path) as f:
+            stamped = json.load(f)
+        if stamped != family:
+            raise ValueError(
+                f"LSH index at {index_path} was built with hash family {stamped}, "
+                f"this run computes {family}: rebuild the index"
+            )
+    elif os.path.exists(index_path):
+        raise ValueError(
+            f"LSH index at {index_path} has no hash-family stamp: rebuild the index"
+        )
 
     index_schema = T.StructType(
         [
@@ -474,7 +470,10 @@ def incremental_lsh_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.errors import AnalysisException
 
-        index_path = f"{work_dir}/index"
+        if not os.path.exists(stamp_path):
+            os.makedirs(work_dir, exist_ok=True)
+            with open(stamp_path, "w") as f:
+                json.dump(family, f)
         try:
             # STRICTLY PRIOR batches only (batch_id is the discovered
             # partition column): on a foreachBatch replay the directory

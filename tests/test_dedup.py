@@ -53,9 +53,13 @@ def test_sliding_concat_matches_transform_slice_reference(spark):
     """The r7 linear-time gram builder (_sliding_concat, zip_with chain)
     must be VALUE-IDENTICAL to the reference transform+slice form it
     replaced — including the short-document tail grams produced by slice
-    truncation — for every gram width in use (1, 2, 3, 5, 13)."""
+    truncation — for every gram width in use (1, 2, 3, 5, 13).
+
+    NULL text is the one documented divergence: ``_sliding_concat`` (and
+    so ``_shingles``) yields NULL — no shingles — where the replaced form
+    yielded ``[""]``; the NULL row pins that contract."""
     from imgfact_spark.functions.text import normalized_tokens
-    from imgfact_spark.operators.dedup import _sliding_concat
+    from imgfact_spark.operators.dedup import _shingles, _sliding_concat
 
     edge = spark.createDataFrame(
         [
@@ -64,12 +68,13 @@ def test_sliding_concat_matches_transform_slice_reference(spark):
                 [
                     "", " ", "\t\n", "a", "a b", "a b c", "a  b\tc d",
                     "x " * 30, "one two three four five six",
-                    "A B a b A B a", "  lead trail  ",
+                    "A B a b A B a", "  lead trail  ", None,
                 ]
             )
         ],
-        ["doc_id", "text"],
+        "doc_id string, text string",
     )
+    text = edge.filter(F.col("text").isNotNull())
     for n in (1, 2, 3, 5, 13):
         toks = normalized_tokens("text")
         num = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
@@ -79,7 +84,7 @@ def test_sliding_concat_matches_transform_slice_reference(spark):
         )
         new = _sliding_concat(toks, n, num)
         bad = (
-            edge.select(ref.alias("r"), new.alias("n"))
+            text.select(ref.alias("r"), new.alias("n"))
             .filter(
                 F.col("r").isNull()
                 | F.col("n").isNull()
@@ -88,6 +93,10 @@ def test_sliding_concat_matches_transform_slice_reference(spark):
             .count()
         )
         assert bad == 0, f"gram builder diverges at n={n}"
+        null = edge.filter(F.col("text").isNull()).select(
+            new.alias("grams"), _shingles("text", n).alias("shingles")
+        ).first()
+        assert null["grams"] is None and null["shingles"] is None, n
 
 
 def test_minhash_lsh_finds_near_dups(spark):

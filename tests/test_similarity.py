@@ -314,7 +314,7 @@ def test_ivf_deterministic_training_matches_numpy_replica(spark):
 
 def test_ivf_fast_driver_training_matches_distributed_loop(spark):
     """Fast-mode training collects and trains driver-side under the
-    max_driver_train_rows contract (r7 job-latency optimization); forcing
+    max_driver_train_elements contract (r7 job-latency optimization); forcing
     the bound to 0 must take the distributed Lloyd loop, and the two must
     agree to float-associativity tolerance (the fast path's contract) with
     identical cell assignments on the fixture."""
@@ -326,7 +326,7 @@ def test_ivf_fast_driver_training_matches_distributed_loop(spark):
     df, _ = _vectors(spark)
     fast = ivf_train_centroids(df, DIM, n_cells=8, n_iters=3)
     dist = ivf_train_centroids(
-        df, DIM, n_cells=8, n_iters=3, max_driver_train_rows=0
+        df, DIM, n_cells=8, n_iters=3, max_driver_train_elements=0
     )
     assert fast.shape == dist.shape
     assert np.allclose(fast, dist, atol=1e-9), "training paths diverge"
@@ -339,6 +339,31 @@ def test_ivf_fast_driver_training_matches_distributed_loop(spark):
         for r in _assign_cells(df, dist, "embedding").collect()
     }
     assert a_fast == a_dist
+
+
+def test_ivf_driver_training_bound_counts_elements(spark, monkeypatch):
+    """The driver-side training bound is in vector ELEMENTS, not rows: 20
+    rows fit a 200-row × 64-d budget at 64-d, but the same 20 rows at
+    1024-d exceed it and must train distributed."""
+    from imgfact_spark.operators import similarity
+
+    driver_runs = []
+    fast = similarity._train_centroids_numpy_fast
+    monkeypatch.setattr(
+        similarity,
+        "_train_centroids_numpy_fast",
+        lambda *a: driver_runs.append(a[1].shape) or fast(*a),
+    )
+    rng = np.random.RandomState(3)
+    bound = 200 * 64
+    for dim in (64, 1024):
+        rows = [(i, [float(x) for x in rng.standard_normal(dim)]) for i in range(20)]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        cents = similarity.ivf_train_centroids(
+            df, dim, n_cells=4, n_iters=1, max_driver_train_elements=bound
+        )
+        assert cents.shape == (4, dim)
+    assert driver_runs == [(20, 64)], "1024-d input above the bound trained on the driver"
 
 
 def test_ivf_column_mode_matches_pandas_candidates(spark):

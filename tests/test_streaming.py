@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from imgfact_spark import synth
@@ -181,11 +183,18 @@ def test_sessionize_stream_matches_batch_across_microbatches(spark, tmp_path):
     assert (7, base, base + 600, 3, 6.0) in emitted
 
 
-def test_incremental_kg_matches_batch_pipeline(spark, tmp_path):
+@pytest.mark.parametrize(
+    "model",
+    [{}, {"scoring": "checkpoint"}, {"entity_gate": "checkpoint"}],
+    ids=["default", "scoring_checkpoint", "entity_gate_checkpoint"],
+)
+def test_incremental_kg_matches_batch_pipeline(spark, tmp_path, model):
     """Streaming incremental KG construction == the batch pipeline on the
     same corpus: docs arrive in two batches, extraction runs once per doc
     into append logs, and the aggregate layer over the logs reproduces
-    run_pipeline's kg_triples and kg_groundings EXACTLY."""
+    run_pipeline's kg_triples and kg_groundings EXACTLY — under the default
+    config and under each served-model dispatch (xxhash64 hash mode, so the
+    model-mode checkpoints are the ones served)."""
     import os
 
     from imgfact_spark import synth
@@ -197,7 +206,9 @@ def test_incremental_kg_matches_batch_pipeline(spark, tmp_path):
     kb = synth.kb_df(spark)
     ents = kb.selectExpr("s as entity").union(kb.selectExpr("o as entity")).distinct()
     r2d = synth.rel2desc_df(spark)
-    cfg = PipelineConfig(min_evidence=1, checkpoint="final", lineage_stats=False)
+    cfg = PipelineConfig(
+        min_evidence=1, checkpoint="final", lineage_stats=False, **model
+    )
 
     input_dir = str(tmp_path / "ikg_in")
     work_dir = str(tmp_path / "ikg_work")
@@ -339,6 +350,35 @@ def test_dedup_stream_drops_recrawled_docs_across_restarts(spark, tmp_path):
         synth.synth_documents(spark, 10)
     )
     assert dedup_stream(batch, fp).count() == 60
+
+
+def test_incremental_lsh_dedup_rejects_index_of_other_hash_family(spark, tmp_path):
+    """The persisted LSH index carries the MINHASH_FAMILY_VERSION it was
+    written under (stamped by the first batch); a run against an index
+    stamped with another family raises instead of re-admitting every
+    historical duplicate."""
+    import json
+
+    from imgfact_spark.operators.dedup import MINHASH_FAMILY_VERSION
+    from imgfact_spark.streaming import incremental_lsh_dedup
+
+    schema = "doc_id long, text string"
+    in_dir, work, ckpt = (str(tmp_path / d) for d in ("in", "work", "ckpt"))
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} about graphs and images") for i in range(6)], schema
+    )
+    docs.coalesce(1).write.parquet(in_dir)
+    incremental_lsh_dedup(spark, in_dir, work, ckpt, docs.schema)
+    stamp_path = os.path.join(work, "index_family.json")
+    with open(stamp_path) as f:
+        stamp = json.load(f)
+    assert stamp["minhash_family_version"] == MINHASH_FAMILY_VERSION
+
+    stamp["minhash_family_version"] = 1
+    with open(stamp_path, "w") as f:
+        json.dump(stamp, f)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        incremental_lsh_dedup(spark, in_dir, work, ckpt, docs.schema)
 
 
 def test_dedup_stream_within_watermark_plan(spark):
