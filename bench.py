@@ -5,7 +5,9 @@ last 2,000 bytes of stdout, so the line carries per-section min + median
 and the headline throughput keys only):
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "median": {...},
-   "throughput": {core keys}}
+   "throughput": {core keys}, "failed_sections": {name: error head}}
+(``failed_sections`` only when a section raised; the line is capped at
+``LINE_CAP`` bytes, see ``final_line``.)
 The FULL record (reps_detail, every throughput extra) is written to
 BENCH/BENCH_DETAIL_latest.json ($SPARK_GRAFT_BENCH_DETAIL overrides).
 
@@ -83,6 +85,57 @@ import shutil
 import sys
 import tempfile
 import time
+import traceback
+
+#: byte ceiling of the stdout line; its reader keeps only the last 2,000
+#: bytes of stdout, so this leaves a margin
+LINE_CAP = 1500
+
+
+def _failure(exc: Exception) -> str:
+    traceback.print_exc()  # full trace to stderr; the line gets the head
+    return f"{type(exc).__name__}: {exc}"[:160]
+
+
+def run_section(
+    name: str, fn, reps: int, warmup: int,
+    timings: dict, reps_detail: dict, failed_sections: dict,
+) -> None:
+    """Time one section: ``warmup`` untimed reps, then ``reps`` timed reps;
+    the min goes to ``timings``.  A section that raises is recorded in
+    ``failed_sections`` (exception type + message head) and the run goes on,
+    so one broken section never costs the whole line."""
+    try:
+        for _ in range(warmup):
+            fn()  # untimed: JVM/JIT + page cache warm-up (2-4× on cold)
+        times = []
+        for _ in range(reps):
+            t0 = time.time()
+            fn()
+            times.append(round(time.time() - t0, 3))
+    except Exception as exc:
+        failed_sections[name] = _failure(exc)
+        return
+    reps_detail[name] = times
+    timings[name] = min(times)
+
+
+def final_line(line: dict) -> str:
+    """The one stdout JSON line, at most ``LINE_CAP`` bytes.  Degrades by
+    dropping the redundant sections first (median repeats queries' shape;
+    every dropped field is still in the detail file), then cuts
+    ``failed_sections`` to its names, then drops ``queries``; ``value`` and
+    the run identity always survive."""
+    out = json.dumps(line)
+    for key in ("median", "throughput", "failed_sections", "queries"):
+        if len(out.encode()) <= LINE_CAP:
+            break
+        if key == "failed_sections" and key in line:
+            line[key] = sorted(line[key])
+        else:
+            line.pop(key, None)
+        out = json.dumps(line)
+    return out
 
 
 def main() -> None:
@@ -110,20 +163,13 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     reps_detail: dict[str, list[float]] = {}
+    failed_sections: dict[str, str] = {}
     extras: dict = {}
 
     warmup = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
 
     def bench_section(name: str, fn) -> None:
-        for _ in range(warmup):
-            fn()  # untimed: JVM/JIT + page cache warm-up (2-4× on cold)
-        times = []
-        for _ in range(reps):
-            t0 = time.time()
-            fn()
-            times.append(round(time.time() - t0, 3))
-        reps_detail[name] = times
-        timings[name] = min(times)
+        run_section(name, fn, reps, warmup, timings, reps_detail, failed_sections)
 
     # ---------------------------------------------------------- kg pipeline
     from imgfact_spark import synth
@@ -165,10 +211,11 @@ def main() -> None:
             extras["kg_triples"] = res.kg_triples.count()
 
         bench_section("kg_construct", kg_run)
-        extras["kg_docs_per_sec"] = round(n_docs / timings["kg_construct"], 1)
-        extras["kg_triples_per_sec"] = round(
-            extras["kg_triples"] / timings["kg_construct"], 1
-        )
+        if "kg_construct" in timings:
+            extras["kg_docs_per_sec"] = round(n_docs / timings["kg_construct"], 1)
+            extras["kg_triples_per_sec"] = round(
+                extras["kg_triples"] / timings["kg_construct"], 1
+            )
 
         # ------------------------------------------------------- relational
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -489,9 +536,10 @@ def main() -> None:
             extras["kg_skew_triples"] = res.kg_triples.count()
 
         bench_section("kg_construct_skew", kg_skew_run)
-        extras["kg_skew_ratio"] = round(
-            timings["kg_construct_skew"] / timings["kg_construct"], 3
-        )
+        if {"kg_construct", "kg_construct_skew"} <= timings.keys():
+            extras["kg_skew_ratio"] = round(
+                timings["kg_construct_skew"] / timings["kg_construct"], 3
+            )
 
         # web-scale dims configuration: entity-scaled dimension tables join
         # as AQE-managed shuffle joins instead of broadcasts (the 10^8-entity
@@ -511,9 +559,12 @@ def main() -> None:
             extras["kg_shuffle_dims_triples"] = res.kg_triples.count()
 
         bench_section("kg_shuffle_dims", kg_shuffle_dims_run)
-        extras["kg_shuffle_dims_ratio"] = round(
-            timings["kg_shuffle_dims"] / timings["kg_construct"], 3
-        )
+        if {"kg_construct", "kg_shuffle_dims"} <= timings.keys():
+            extras["kg_shuffle_dims_ratio"] = round(
+                timings["kg_shuffle_dims"] / timings["kg_construct"], 3
+            )
+    except Exception as exc:  # a failure between sections: keep the line
+        failed_sections["harness"] = _failure(exc)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         spark.stop()
@@ -550,6 +601,7 @@ def main() -> None:
         "reps_detail": reps_detail,
         "median": medians,
         "throughput": extras,
+        "failed_sections": failed_sections,
     }
     try:
         os.makedirs(os.path.dirname(detail_path), exist_ok=True)
@@ -579,14 +631,9 @@ def main() -> None:
         "median": medians,
         "throughput": {k: extras[k] for k in core_keys if k in extras},
     }
-    # hard ceiling: the driver's tail capture is 2,000 bytes — degrade by
-    # dropping the redundant sections (median repeats queries' shape;
-    # every dropped field is still in the detail file) before ever letting
-    # the line outgrow the capture again
-    for drop in ("median", "throughput"):
-        if len(json.dumps(line)) > 1900:
-            line.pop(drop, None)
-    print(json.dumps(line))
+    if failed_sections:
+        line["failed_sections"] = failed_sections
+    print(final_line(line))
 
 
 if __name__ == "__main__":

@@ -1280,7 +1280,7 @@ def kg_construct_e2e(spark, sf_dir):
         spark, docs, r2d, kb, store,
         PipelineConfig(
             min_evidence=1, vcc_threshold=0.02, relation_min_total=0,
-            relation_min_count=0, checkpoint="final", lineage_stats=False,
+            relation_min_count=0, checkpoint="final",
             hash_mode="md5",
         ),
         input_fingerprint="e2e:driver:400",
@@ -1347,7 +1347,7 @@ def kg_construct_triples(spark, sf_dir):
         spark, docs, r2d, kb, store,
         PipelineConfig(
             min_evidence=1, vcc_threshold=0.02, relation_min_total=0,
-            relation_min_count=0, checkpoint="final", lineage_stats=False,
+            relation_min_count=0, checkpoint="final",
             hash_mode="md5",
         ),
         input_fingerprint="e2e:driver:400",

@@ -3,8 +3,10 @@
 Production target is Iceberg (``spark.sql.catalog.*`` configured, writes via
 ``df.writeTo(table).append()`` with a partition spec).  This sandbox has no
 Iceberg runtime jar and no network, so the same API falls back to partitioned
-parquet + a JSON metadata sidecar; the calling code is identical either way
-(BASELINE.json north rule: checkpoint-resumable stages, per-partition lineage).
+parquet + a JSON metadata sidecar, whose per-partition row counts are read
+from the parquet footers of the written files (no Spark job); the calling code
+is identical either way (BASELINE.json north rule: checkpoint-resumable
+stages, per-partition lineage).
 
 Resume semantics mirror the reference's skip-finished-chunks loop
 (dataset_construction/entity_filtering/inference.py:139-143): a stage whose
@@ -19,11 +21,14 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MARKER = "_COMMITTED.json"
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark's directory for NULL
 
 
 @dataclass
@@ -89,96 +94,55 @@ class TableStore:
         name: str,
         partition_by: list[str] | None = None,
         input_fingerprint: str | None = None,
-        mode: str = "overwrite",
-        stats: bool = True,
     ) -> DataFrame:
-        """Write a stage table + commit marker with per-partition row counts.
+        """Overwrite a stage table and commit its marker with per-partition
+        row counts.  The counts come from the parquet footers of the files
+        the write produced, read with pyarrow in this process: no Spark job,
+        no data scan.
 
         With ``catalog_table_prefix`` set (e.g. ``"iceberg.kg"``) the write
         goes through the catalog as an Iceberg table
         (``df.writeTo(...).partitionedBy(...).createOrReplace()``) and
-        lineage additionally lands in the sidecar; the parquet fallback
-        keeps identical semantics for sandboxes without an Iceberg runtime.
+        lineage additionally lands in the sidecar (total rows only, by one
+        count job); the parquet fallback keeps identical semantics where
+        no Iceberg runtime is installed.
         """
+        spark = df.sparkSession
+        meta = {"table": name}
         if self.catalog_table_prefix:
-            return self._write_catalog(
-                df, name, partition_by, input_fingerprint, stats
-            )
-        target = self.path(name)
-        if partition_by:
-            # co-locate each output partition in one task: without this a
-            # partitioned write fans out |shuffle partitions| × |values|
-            # small files (the classic small-files trap; at scale, also the
-            # difference between 30 and 30,000 S3 puts per commit).
-            df = df.repartition(*[F.col(c) for c in partition_by])
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
-
-        spark = df.sparkSession
-        # explicit schema: an empty write leaves no data files to infer
-        # from, and skipping inference avoids a footer-read job besides
-        written = spark.read.schema(df.schema).parquet(target)
-        if not stats:
-            total, partitions = -1, []
-        elif partition_by:
-            part_counts = (
-                written.groupBy(*partition_by)
-                .count()
-                .collect()
-            )
-            partitions = [
-                {**{k: r[k] for k in partition_by}, "rows": r["count"]}
-                for r in part_counts
-            ]
-            total = sum(p["rows"] for p in partitions)
+            table = meta["catalog_table"] = f"{self.catalog_table_prefix}.{name}"
+            writer = df.writeTo(table)
+            if partition_by:
+                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
+            writer.createOrReplace()
+            written = spark.read.table(table)
+            rows, partitions = written.count(), []
+            os.makedirs(self.path(name), exist_ok=True)
         else:
-            total = written.count()
-            partitions = [{"rows": total}]
-
-        meta = {
-            "table": name,
-            "rows": total,
-            "partition_by": partition_by or [],
-            "partitions": partitions,
-            "input_fingerprint": input_fingerprint,
-            "committed_at": time.time(),
-            "schema": written.schema.jsonValue(),
-        }
-        with open(self._marker_path(name), "w") as f:
-            json.dump(meta, f)
-        return written
-
-    def _write_catalog(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: list[str] | None,
-        input_fingerprint: str | None,
-        stats: bool,
-    ) -> DataFrame:
-        """Iceberg-catalog write path (production; requires the runtime jar
-        + a configured ``spark.sql.catalog.*``)."""
-        table = f"{self.catalog_table_prefix}.{name}"
-        writer = df.writeTo(table)
-        if partition_by:
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        writer.createOrReplace()
-        spark = df.sparkSession
-        written = spark.read.table(table)
-        total = written.count() if stats else -1
-        meta = {
-            "table": name,
-            "catalog_table": table,
-            "rows": total,
-            "partition_by": partition_by or [],
-            "partitions": [],
-            "input_fingerprint": input_fingerprint,
-            "committed_at": time.time(),
-            "schema": written.schema.jsonValue(),
-        }
-        os.makedirs(self.path(name), exist_ok=True)
+            target = self.path(name)
+            if partition_by:
+                # co-locate each output partition in one task: without this a
+                # partitioned write fans out |shuffle partitions| × |values|
+                # small files (the classic small-files trap; at scale, also the
+                # difference between 30 and 30,000 S3 puts per commit).
+                df = df.repartition(*[F.col(c) for c in partition_by])
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(target)
+            # explicit schema: an empty write leaves no data files to infer
+            # from, and skipping inference avoids a footer-read job besides
+            written = spark.read.schema(df.schema).parquet(target)
+            partitions = _footer_counts(target, partition_by or [])
+            rows = sum(p["rows"] for p in partitions)
+        meta.update(
+            rows=rows,
+            partition_by=partition_by or [],
+            partitions=partitions,
+            input_fingerprint=input_fingerprint,
+            committed_at=time.time(),
+            schema=written.schema.jsonValue(),
+        )
         with open(self._marker_path(name), "w") as f:
             json.dump(meta, f)
         return written
@@ -191,8 +155,6 @@ class TableStore:
         mp = self._marker_path(name)
         if os.path.exists(mp):
             # committed schema → no inference, and empty tables read fine
-            from pyspark.sql.types import StructType
-
             with open(mp) as f:
                 schema = StructType.fromJson(json.load(f)["schema"])
             return spark.read.schema(schema).parquet(self.path(name))
@@ -224,6 +186,33 @@ class TableStore:
         )
 
 
+def _footer_counts(root: str, partition_by: list[str]) -> list[dict]:
+    """Per-partition row counts of the parquet table at ``root``, summed from
+    each data file's footer ``num_rows``.  Partition values are read back
+    from the hive-style ``col=value`` directory names as strings (Spark's
+    ``%XX`` escapes undone; its NULL directory → None).  Unpartitioned → one
+    ``{"rows": n}`` entry; an empty partitioned table → no entries."""
+    import pyarrow.parquet as pq
+
+    partitions = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if "=" in d)
+        segs = [] if dirpath == root else os.path.relpath(dirpath, root).split(os.sep)
+        if len(segs) != len(partition_by):
+            continue
+        entry = {}
+        for col, seg in zip(partition_by, segs):
+            value = seg.split("=", 1)[1]
+            entry[col] = None if value == _NULL_PARTITION else unquote(value)
+        entry["rows"] = sum(
+            pq.read_metadata(os.path.join(dirpath, f)).num_rows
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        partitions.append(entry)
+    return partitions
+
+
 def stage(
     store: TableStore,
     name: str,
@@ -231,7 +220,6 @@ def stage(
     compute,
     spark: SparkSession,
     partition_by: list[str] | None = None,
-    stats: bool = True,
 ) -> DataFrame:
     """Checkpoint-or-compute a pipeline stage.
 
@@ -242,8 +230,7 @@ def stage(
         return store.read(spark, name)
     df = compute()
     return store.write(
-        df, name, partition_by=partition_by, input_fingerprint=input_fingerprint,
-        stats=stats,
+        df, name, partition_by=partition_by, input_fingerprint=input_fingerprint
     )
 
 

@@ -120,7 +120,7 @@ def detect_mentions(text_spans: DataFrame, rel2desc: DataFrame) -> DataFrame:
     # Only sound when every template has a distinctive literal; otherwise
     # fall back to the kernel's own per-template prescan.
     # Shape measured at the reference's 142-template scale
-    # (tools/mention_gate_bench.py, 2M rows): this contains-chain runs 3.3×
+    # (BENCH/PLAN_NOTES.md, 2M rows): this contains-chain runs 3.3×
     # FASTER than one rlike over a \Q…\E-quoted alternation (9.3 s vs
     # 30.4 s) — java.util.regex retries every alternative at every position
     # (NFA backtracking, no Aho-Corasick), while each contains() is a

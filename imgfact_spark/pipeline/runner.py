@@ -70,13 +70,12 @@ class PipelineConfig:
     entity_gate: str = "column"
     vcc_checkpoint: str | None = None  # .npz path for entity_gate="checkpoint"
     hash_mode: str = "xxhash64"   # "xxhash64" | "md5" (cross-engine oracle mode)
-    lineage_stats: bool = True    # per-partition row counts in commit markers
     broadcast_entity_dims: bool = True  # hint entity-scaled dims (off at web scale)
 
 
 #: PipelineConfig fields that cannot affect stage CONTENTS (only plan shape
 #: or bookkeeping) — excluded from the stage fingerprint.
-_PLAN_ONLY_FIELDS = ("checkpoint", "lineage_stats", "broadcast_entity_dims")
+_PLAN_ONLY_FIELDS = ("checkpoint", "broadcast_entity_dims")
 
 
 def _config_fingerprint(cfg: PipelineConfig) -> str:
@@ -128,17 +127,14 @@ def run_pipeline(
     input_fp = input_fingerprint or fingerprint_df(documents.select("doc_id"))
     # Stage identity = input × config: re-running with changed thresholds /
     # topk / scoring must NOT resume from tables computed under the old
-    # config.  Plan-only knobs (checkpoint granularity, broadcast hints,
-    # lineage stats) are excluded — they cannot change stage contents.
+    # config.  Plan-only knobs (checkpoint granularity, broadcast hints)
+    # are excluded — they cannot change stage contents.
     fp = f"{input_fp}:{_config_fingerprint(cfg)}"
     persisted: list[DataFrame] = []
 
     def _stage(name, compute, partition_by=None, shared=False, keep=None):
         if cfg.checkpoint == "all" or name in _FINAL_STAGES:
-            return stage(
-                store, name, fp, compute, spark,
-                partition_by=partition_by, stats=cfg.lineage_stats,
-            )
+            return stage(store, name, fp, compute, spark, partition_by=partition_by)
         df = lazy_stage(name, compute, keep=keep)
         if shared or keep:
             df = df.persist()

@@ -119,8 +119,8 @@ def test_changed_config_invalidates_resume(spark, small_run):
 
 
 def test_plan_only_config_does_not_invalidate(spark, small_run):
-    """Plan-shape knobs (broadcast hints, lineage stats) must NOT invalidate
-    committed stages — contents are identical."""
+    """Plan-shape knobs (broadcast hints) must NOT invalidate committed
+    stages — contents are identical."""
     import dataclasses
 
     docs, kb, ents, r2d, store, cfg, res, triples80 = small_run
@@ -141,6 +141,82 @@ def test_lineage_df(spark, small_run):
     rows = {r["table"]: r for r in ldf.collect()}
     assert "kg_triples" in rows and "spans" in rows
     assert rows["spans"]["rows"] > 0
+
+
+def test_config_fingerprint_is_stable():
+    """Stores committed by earlier versions still resume: the default config
+    keeps its stage fingerprint (plan-only fields never entered it)."""
+    from imgfact_spark.pipeline.runner import _config_fingerprint
+
+    assert _config_fingerprint(PipelineConfig()) == "9c8d876b77e4"
+
+
+def _subset_frame(spark, n=5000):
+    """24 letter subsets plus a NULL one and one that needs path escaping."""
+    return spark.range(n).selectExpr(
+        "id",
+        "CASE WHEN id % 26 = 24 THEN NULL WHEN id % 26 = 25 THEN 'a/b c%' "
+        "ELSE char(97 + CAST(id % 26 AS INT)) END AS subset",
+    )
+
+
+def _jobs_in_group(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_issues_no_job_beyond_the_write(spark, tmp_path):
+    """The commit marker's counts are read from the written files' footers:
+    a store write runs exactly the jobs of the bare partitioned write."""
+    df = _subset_frame(spark)
+    bare = _jobs_in_group(
+        spark, "bare_write",
+        lambda: df.repartition("subset").write.partitionBy("subset")
+        .parquet(str(tmp_path / "bare")),
+    )
+    store = TableStore(str(tmp_path / "store"))
+    committed = _jobs_in_group(
+        spark, "store_write",
+        lambda: store.write(df, "t", partition_by=["subset"]),
+    )
+    assert bare > 0
+    assert committed == bare
+
+
+def test_marker_counts_match_groupby(spark, tmp_path):
+    """Per-partition marker counts equal a groupBy count, including the NULL
+    partition and a value Spark escapes in its directory name."""
+    df = _subset_frame(spark)
+    store = TableStore(str(tmp_path / "store"))
+    store.write(df, "t", partition_by=["subset"])
+    meta = store.lineage("t")
+    want = {r["subset"]: r["count"] for r in df.groupBy("subset").count().collect()}
+    got = {p["subset"]: p["rows"] for p in meta["partitions"]}
+    assert len(want) == 26 and None in want and "a/b c%" in want
+    assert got == want
+    assert meta["rows"] == 5000
+
+    store.write(df, "flat")
+    assert store.lineage("flat")["partitions"] == [{"rows": 5000}]
+    assert store.lineage("flat")["rows"] == 5000
+
+
+def test_empty_writes_commit_zero_rows(spark, tmp_path):
+    empty = _subset_frame(spark).limit(0)
+    store = TableStore(str(tmp_path / "store"))
+    store.write(empty, "parted", partition_by=["subset"])
+    store.write(empty, "flat")
+    assert store.lineage("parted")["rows"] == 0
+    assert store.lineage("parted")["partitions"] == []
+    assert store.lineage("flat")["rows"] == 0
+    assert store.lineage("flat")["partitions"] == [{"rows": 0}]
+    assert store.read(spark, "parted").count() == 0
 
 
 def test_compact_table_reduces_files_preserves_contents(spark, tmp_path):

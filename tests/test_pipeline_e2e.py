@@ -203,10 +203,7 @@ def test_pipeline_checkpoint_scoring_is_dropin(spark, tmp_path):
     r2d = synth.rel2desc_df(spark)
 
     def run(scoring, sub):
-        cfg = PipelineConfig(
-            checkpoint="final", scoring=scoring, hash_mode="md5",
-            lineage_stats=False,
-        )
+        cfg = PipelineConfig(checkpoint="final", scoring=scoring, hash_mode="md5")
         store = TableStore(str(tmp_path / sub))
         return run_pipeline(
             spark, docs, r2d, ents, store, cfg,
@@ -233,9 +230,7 @@ def test_pipeline_checkpoint_entity_gate_is_dropin(spark, tmp_path):
     r2d = synth.rel2desc_df(spark)
 
     def run(sub, **kw):
-        cfg = PipelineConfig(
-            checkpoint="final", hash_mode="md5", lineage_stats=False, **kw
-        )
+        cfg = PipelineConfig(checkpoint="final", hash_mode="md5", **kw)
         store = TableStore(str(tmp_path / sub))
         return run_pipeline(
             spark, docs, r2d, ents, store, cfg,

@@ -206,9 +206,7 @@ def test_incremental_kg_matches_batch_pipeline(spark, tmp_path, model):
     kb = synth.kb_df(spark)
     ents = kb.selectExpr("s as entity").union(kb.selectExpr("o as entity")).distinct()
     r2d = synth.rel2desc_df(spark)
-    cfg = PipelineConfig(
-        min_evidence=1, checkpoint="final", lineage_stats=False, **model
-    )
+    cfg = PipelineConfig(min_evidence=1, checkpoint="final", **model)
 
     input_dir = str(tmp_path / "ikg_in")
     work_dir = str(tmp_path / "ikg_work")

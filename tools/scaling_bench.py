@@ -111,7 +111,7 @@ def worker(cpus: int, docs_path: str, reps: int, profile: str = "fast",
         res = run_pipeline(
             spark, spark.read.parquet(path), r2d, ents, store,
             PipelineConfig(
-                min_evidence=1, checkpoint="final", lineage_stats=False,
+                min_evidence=1, checkpoint="final",
                 scoring="model_sim" if profile == "model" else "column",
             ),
             input_fingerprint=f"scaling:{path}",

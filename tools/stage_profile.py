@@ -53,7 +53,7 @@ def worker(cpus: int, docs_path: str, log_dir: str) -> None:
     t0 = time.time()
     res = run_pipeline(
         spark, docs, r2d, ents, store,
-        PipelineConfig(min_evidence=1, checkpoint="final", lineage_stats=False),
+        PipelineConfig(min_evidence=1, checkpoint="final"),
         input_fingerprint=f"profile:{docs_path}",
         materialize_input=False,
     )
