@@ -43,66 +43,48 @@ from imgfact_spark.entry_queries.training import (  # noqa: F401  (test surface)
 # CORRECTNESS row.  Rotation policy (COVERAGE.md): no query's newest driver
 # row may age past two rounds.
 #
-# Round 6 completes the r5 rotation in the other direction: the 50 queries
-# checked in r5 hold rows fresh through r7, so they rotate OUT (except the
-# flagship, which never leaves); their slots go to
-#   * the six late-r5 queries registered past the r5 cut with full oracles
-#     but no driver row yet (the r6-priority set named in the r5 comment),
-#   * this round's two first-timers (M1/M4 checkpoint serving), and
-#   * 41 of the 46 queries whose newest rows are r4 (at the two-round
-#     freshness edge).
-# Five r4-row queries stay out one more round — each is code-untouched and
-# shares its oracle-certified operator path with an in-sample sibling
-# (t_bm25_multi↔t_bm25_topk, a9_weighted_prf↔a9_ranking_metrics,
-# j8b_diff_partner_pop↔j8_theta_diff_partner, api_entity_vocab↔
-# api_retrieve_by_relation, s_quantize_embeddings↔the s_* ANN set) — and
-# they head the r7 front-50.
+# The nine queries whose newest CORRECTNESS rows are r4 lead the front-50,
+# right after the flagship (which never leaves).  Each was deferred for a
+# query that needed a first row (it has one now) or because an in-sample
+# sibling shares its operator path, and each takes the slot of that query
+# or sibling (t_bm25_topk, a9_ranking_metrics,
+# j8_theta_diff_partner, api_retrieve_by_relation, s_lsh_topk,
+# d_dedup_corpus, t_decontaminate, d_dedup_incremental, st_incremental_dedup
+# rotate OUT — all checked since r6).  Next, the r6-checked set ages to its
+# own two-round edge.
 # ---------------------------------------------------------------------------
 _DRIVER_SAMPLE_FIRST = [
     # flagship (always in-sample)
     "kg_construct_e2e",
-    # the six r6-priority queries: registered late in r5, check_oracles-green
-    # but never driver-checked — first rows this round
+    # newest CORRECTNESS rows r4 (freshness edge) — refresh first
+    "t_bm25_multi",
+    "a9_weighted_prf",
+    "j8b_diff_partner_pop",
+    "api_entity_vocab",
+    "s_quantize_embeddings",
+    "d_minhash_lsh_pairs",
+    "d_ngram_jaccard_pairs",
+    "d_simhash_pairs",
+    "kg_construct_triples",
+    # checked since r6
     "d_winnow_fingerprints",
     "d_winnow_dup_pairs",
     "t_split_sentences",
     "t_domain_profile",
     "kg_khop",
     "t_inverted_index",
-    # new this round: M1 VCC gate + M4 contrastive ranker served from
-    # executor-loaded checkpoints (the m2_checkpoint_scoring pattern)
     "m1_checkpoint_gate",
     "m4_checkpoint_ranking",
-    # rotated back IN: newest driver rows are r4 (freshness edge)
     "a12_filter_intersection",
     "a13_union_shard_partials",
     "a2_group_collect_scored",
     "a6_vector_mean_pool",
     "a8_oversample_balance",
-    "a9_ranking_metrics",
-    "api_retrieve_by_relation",
-    # d_minhash_lsh_pairs defers one round (r4 row; its exact md5
-    # minhash+banding path is re-exercised in-sample by the new composed
-    # query below) for the end-to-end dedup ACTION, which needs a first row
-    "d_dedup_corpus",
-    # d_ngram_jaccard_pairs defers one round (r4 row; the gram+jaccard
-    # verify path is re-exercised in-sample inside d_dedup_corpus) for the
-    # decontamination ACTION, which needs a first row
-    "t_decontaminate",
-    # d_simhash_pairs defers one round (r4 row, code untouched) for the
-    # incremental index-dedup ACTION, which needs a first row
-    "d_dedup_incremental",
     "ep_masked_inputs",
     "ep_split_sets_sizes",
     "j3_visual_ratio",
     "j7_first_seen_label_ids",
-    "j8_theta_diff_partner",
     "j9_messy_swap",
-    # kg_construct_triples defers one round (r4 row; its EXACT oracle —
-    # _e2e_triples_oracle_sql — stays in-sample via st_incremental_kg and
-    # the flagship covers the same pipeline) for the new streaming
-    # incremental-dedup query, which needs a first row
-    "st_incremental_dedup",
     "m6_cluster_representatives",
     "mm_frame_sample",
     "o4_sample_per_group",
@@ -111,11 +93,9 @@ _DRIVER_SAMPLE_FIRST = [
     "s5_json_roundtrip",
     "s_cosine_topk",
     "s_ivf_topk",
-    "s_lsh_topk",
     "st_incremental_kg",
     "st_sessionization",
     "st_windowed_event_counts",
-    "t_bm25_topk",
     "t_contamination",
     "t_corpus_length_profile",
     "t_exact_dedup_groups",
@@ -129,12 +109,6 @@ _DRIVER_SAMPLE_FIRST = [
     "x_multiway_join_rollup",
 ]
 
-
-# r7 front-50 priority: t_bm25_multi, a9_weighted_prf, j8b_diff_partner_pop,
-# api_entity_vocab, s_quantize_embeddings, d_minhash_lsh_pairs,
-# d_ngram_jaccard_pairs, d_simhash_pairs, kg_construct_triples (newest
-# rows r4 — refresh first),
-# then the r5-checked set ages to its own two-round edge.
 
 _unknown = [n for n in _DRIVER_SAMPLE_FIRST if n not in QUERIES]
 

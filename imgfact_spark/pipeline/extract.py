@@ -1,15 +1,17 @@
-"""Stage 1: batched mention detection + candidate triple extraction.
+"""Stage 1: mention detection + candidate triple extraction.
 
 The reference's extraction substrate is a DBpedia triple dump filtered to
 visual entities (relation_filtering/filter_tuples.py) plus model scoring; the
 north rule re-frames it as mention detection over interleaved documents.
 
-Implementation: an **iterator pandas UDF** (mapInPandas) over text spans —
-the direct analogue of the reference's batched DataLoader inference loops
-(entity_filtering/inference.py:160-176, batch=64): per partition the
-relation-template pattern table (broadcast-sized: 142 rows in the reference,
-rel2desc.txt) is compiled ONCE, then each Arrow batch is matched with
-vectorized ``pandas.Series.str.extract`` — no per-row Python.
+Implementation: ONE Catalyst projection over text spans.  The
+relation-template table (broadcast-sized: 142 rows in the reference,
+rel2desc.txt) becomes one ``regexp_extract`` pair per template, all
+evaluated in the JVM — no Python worker, no Arrow transfer.  Each template
+is an anchored java.util.regex pattern whose constant segments are
+``\\Q…\\E``-quoted and which runs in UNIX_LINES mode ``(?d)``, so it matches
+exactly what Python ``re`` matches for the same template (only ``\\n``
+ends a line; ``\\r``, ``\\u0085`` and ``\\u2028`` are ordinary characters).
 
 Entity linking happens downstream as a broadcast dictionary join
 (entity-surface → KB entity), per SURVEY.md §1.4 "dict/set hash indexes →
@@ -18,41 +20,29 @@ broadcast dimension DataFrames".
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from imgfact_spark.functions.text import canonical_entity
 
-MENTION_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("pos", T.IntegerType(), False),
-        T.StructField("p", T.StringType(), False),
-        T.StructField("s_surface", T.StringType(), False),
-        T.StructField("o_surface", T.StringType(), False),
-    ]
-)
+
+def _quote(segment: str) -> str:
+    """java.util.regex literal block; a ``\\E`` inside the segment is split
+    out of the ``\\Q…\\E`` block and matched as an escaped backslash + E."""
+    return "\\Q" + segment.replace("\\E", "\\E\\\\E\\Q") + "\\E"
 
 
-def _template_to_pattern(template: str) -> str:
-    """``"{}'s former team is {}."`` → anchored regex with two capture
-    groups.  First slot non-greedy, second greedy-trimmed (consumes to the
-    template tail)."""
-    escaped = re.escape(template)
-    # re.escape leaves {} escaped as \{\} in py<3.7 only; modern escape keeps
-    # {} literal. Replace both slot spellings defensively.
-    for slot in (r"\{\}", "{}"):
-        if slot in escaped:
-            first = escaped.replace(slot, "(.+?)", 1)
-            if slot in first:
-                escaped = first.replace(slot, "(.+?)", 1)
-                break
-    return "^" + escaped + "$"
+def _template_pattern(p: str, template: str) -> str:
+    """``"{} died in {}."`` → ``(?d)^\\Q\\E(.+?)\\Q died in \\E(.+?)\\Q.\\E$``.
+    Both slots are non-greedy; the ``$`` anchor makes the second consume
+    to the template tail."""
+    segments = template.split("{}")
+    if len(segments) != 3:
+        raise ValueError(
+            f"relation template for p={p!r} must have exactly two '{{}}' "
+            f"slots, got {len(segments) - 1}: {template!r}"
+        )
+    return "(?d)^" + "(.+?)".join(_quote(s) for s in segments) + "$"
 
 
 def _template_literal(template: str) -> str:
@@ -66,72 +56,66 @@ def _template_literal(template: str) -> str:
 
 
 def detect_mentions(text_spans: DataFrame, rel2desc: DataFrame) -> DataFrame:
-    """text spans × relation templates → raw (doc_id, pos, p, surfaces).
+    """text spans × relation templates → raw (doc_id, pos, p, s_surface,
+    o_surface), one row per (span, matching template).
 
     ``rel2desc`` is collected driver-side (dimension table, ≤ a few hundred
-    rows by construction) and closed over — the same broadcast the reference
-    does with its rel2desc dict (eval_and_app/prepare_data.py:21-25).
+    rows by construction) and compiled into the plan — the same broadcast
+    the reference does with its rel2desc dict
+    (eval_and_app/prepare_data.py:21-25).  A template without exactly two
+    ``{}`` slots raises ``ValueError`` here, at plan time.
     """
     templates = [
-        (r["p"], _template_to_pattern(r["template"]), _template_literal(r["template"]))
+        (r["p"], _template_pattern(r["p"], r["template"]), _template_literal(r["template"]))
         for r in rel2desc.collect()
     ]
-
-    def match_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = [(p, re.compile(pat), lit) for p, pat, lit in templates]
-        for pdf in batches:
-            outs = []
-            texts = pdf["text"].astype(str)
-            for p, rgx, lit in compiled:
-                # cheap vectorized literal prescan: only rows containing the
-                # template's distinctive constant segment see the full regex
-                # (the reference's analogue is its per-relation file split —
-                # each scorer only ever sees its own relation's rows)
-                cand = texts.str.contains(lit, regex=False) if lit else texts.notna()
-                if not cand.any():
-                    continue
-                ext = texts[cand].str.extract(rgx)  # vectorized over the batch
-                hit = ext[0].notna()
-                if hit.any():
-                    sub = pdf.loc[hit[hit].index, ["doc_id", "pos"]].copy()
-                    sub["p"] = p
-                    sub["s_surface"] = ext.loc[hit, 0]
-                    sub["o_surface"] = ext.loc[hit, 1]
-                    outs.append(sub)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(dtype="str"),
-                        "pos": pd.Series(dtype="int32"),
-                        "p": pd.Series(dtype="str"),
-                        "s_surface": pd.Series(dtype="str"),
-                        "o_surface": pd.Series(dtype="str"),
-                    }
-                )
-
-    src = text_spans.filter(F.col("kind") == "text").select("doc_id", "pos", "text")
+    text = F.col("text")
+    # NULL text matches no template; read as "" it also makes every
+    # extracted column non-nullable, so the optimizer drops the null checks
+    # that link_entities' join keys would add (each check re-evaluates
+    # canonical_entity over a surface).
+    src = text_spans.filter(F.col("kind") == "text").select(
+        "doc_id", "pos", F.coalesce(text, F.lit("")).alias("text")
+    )
     # JVM-side literal prescan: a row that contains NO template's constant
-    # segment cannot match any anchored template, so it never needs to cross
-    # the Arrow boundary at all — on real corpora the overwhelming majority
-    # of text is non-factual, so this turns the kernel's input from "all
-    # text" into "plausible mentions" before a single byte is transferred.
-    # Only sound when every template has a distinctive literal; otherwise
-    # fall back to the kernel's own per-template prescan.
-    # Shape measured at the reference's 142-template scale
-    # (BENCH/PLAN_NOTES.md, 2M rows): this contains-chain runs 3.3×
+    # segment cannot match any anchored template, so it never reaches the
+    # per-template regexes — on real corpora the overwhelming majority of
+    # text is non-factual.  Only sound when every template has a
+    # distinctive literal.  Shape measured at the reference's 142-template
+    # scale (BENCH/PLAN_NOTES.md, 2M rows): this contains-chain runs 3.3×
     # FASTER than one rlike over a \Q…\E-quoted alternation (9.3 s vs
     # 30.4 s) — java.util.regex retries every alternative at every position
     # (NFA backtracking, no Aho-Corasick), while each contains() is a
-    # vectorized codegen substring scan.  Keep the chain.
+    # vectorized codegen substring scan.  Keep the chain: without it the
+    # per-template extraction below ran 1.6× slower at 142 templates.
     literals = [lit for _, _, lit in templates]
     if templates and all(literals):
-        gate = F.col("text").contains(literals[0])
+        gate = text.contains(literals[0])
         for lit in literals[1:]:
-            gate = gate | F.col("text").contains(lit)
+            gate = gate | text.contains(lit)
         src = src.filter(gate)
-    return src.mapInPandas(match_batches, schema=MENTION_SCHEMA)
+    # Per template: the literal check (``contains("")`` is always true) guards
+    # the regex; a match always captures a non-empty first slot, so ``""``
+    # means no match.  Non-matching templates yield NULL, dropped by
+    # array_compact before inline fans the hits out to rows.
+    hits = []
+    for p, pat, lit in templates:
+        s = F.regexp_extract(text, pat, 1)
+        hits.append(
+            F.when(
+                text.contains(lit) & (s != ""),
+                F.struct(
+                    F.lit(p).alias("p"),
+                    s.alias("s_surface"),
+                    F.regexp_extract(text, pat, 2).alias("o_surface"),
+                ),
+            )
+        )
+    # an empty template table still yields the typed (empty) mention relation
+    found = F.array_compact(F.array(*hits)) if hits else F.array().cast(
+        "array<struct<p:string,s_surface:string,o_surface:string>>"
+    )
+    return src.select("doc_id", "pos", F.inline(found))
 
 
 def link_entities(

@@ -22,40 +22,24 @@ def relation_counts(triples: DataFrame) -> DataFrame:
     return triples.groupBy("p").agg(F.count("*").alias("count"))
 
 
-def visual_relation_ratio(
-    visual_triples: DataFrame, all_triples: DataFrame, min_total: int = 20
-) -> DataFrame:
-    """→ (p, vis_count, all_count, ratio) sorted ratio desc; total ≥ min_total."""
-    vis = visual_triples.groupBy("p").agg(F.count("*").alias("vis_count"))
-    alln = all_triples.groupBy("p").agg(F.count("*").alias("all_count"))
-    return (
-        alln.join(vis, "p", "left")
-        .fillna(0, subset=["vis_count"])
-        .filter(F.col("all_count") >= min_total)
-        .withColumn("ratio", F.round(F.col("vis_count") / F.col("all_count"), 4))
-        .orderBy(F.desc("ratio"), "p")
-    )
-
-
 def visual_relation_ratio_fused(
     candidates: DataFrame,
     visual: DataFrame,
     min_total: int = 20,
     broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Same (p, vis_count, all_count, ratio) relation as
-    :func:`visual_relation_ratio`, computed in ONE aggregation pass.
+    """Visual relation ratio → (p, vis_count, all_count, ratio), total ≥
+    min_total, computed in ONE aggregation pass.
 
-    The two-input form costs two shuffled aggregations over the candidate
-    table plus a join (and its callers sorted a relation nobody reads in
-    order).  Here visual membership is attached as broadcast-join flags and
-    both counts come out of a single groupBy(p) — one candidate scan, one
-    tiny shuffle, no sort.  Identical values by construction: ``visual``
+    The reference's two-input form (|visual triples with p| / |all triples
+    with p|) costs two shuffled aggregations over the candidate table plus
+    a join.  Here visual membership is attached as broadcast-join flags
+    and both counts come out of a single groupBy(p) — one candidate scan,
+    one tiny shuffle, no sort.  Identical values by construction: ``visual``
     is unique per entity, so the left joins never duplicate rows and
     ``vis_count`` counts exactly the double-semi-join survivors.
-    Unsorted: the whitelist consumer is order-insensitive; use the
-    two-input form when the reference's sorted report is wanted
-    (gen_visual_relations.py:16-31).
+    Unsorted: the whitelist consumer is order-insensitive; sort by
+    (ratio desc, p) for the reference's report (gen_visual_relations.py:16-31).
     """
     v = visual.select("entity")
     if broadcast_dim:

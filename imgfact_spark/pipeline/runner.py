@@ -6,7 +6,7 @@ Stage DAG (SURVEY.md §3.1):
       └─ spans            (ingest.explode_spans)
           ├─ media        (ingest.media_spans)
           │    └─ visual_entities   (entity gate, M1)
-          └─ mentions     (extract.detect_mentions — pandas-UDF kernel)
+          └─ mentions     (extract.detect_mentions — per-template regexp_extract)
                └─ candidates        (extract.link_entities)
                     └─ visual_candidates (J1 semi-joins)
                          └─ [relation whitelist]

@@ -12,12 +12,36 @@ import re
 import pandas as pd
 
 from imgfact_spark.functions.scoring import _MOD, _to_signed, xxh64
-from imgfact_spark.pipeline.extract import _template_to_pattern
 
 
 def u(*parts: str) -> float:
     h = _to_signed(xxh64("|".join(parts).encode("utf-8")))
     return (h % _MOD + _MOD) % _MOD / _MOD
+
+
+def template_to_pattern_py(template: str) -> str:
+    """Python-``re`` reading of a two-slot relation template: the constant
+    segments ``re.escape``d, both slots non-greedy ``(.+?)``, anchored at
+    both ends."""
+    return "^" + "(.+?)".join(re.escape(seg) for seg in template.split("{}")) + "$"
+
+
+def mentions_py(
+    spans: list[tuple], templates: list[tuple[str, str]]
+) -> list[tuple]:
+    """spans [(doc_id, pos, kind, text)] × templates [(p, template)] →
+    sorted [(doc_id, pos, p, s_surface, o_surface)]: one row per text span
+    and matching template; NULL text matches nothing."""
+    compiled = [(p, re.compile(template_to_pattern_py(t))) for p, t in templates]
+    out = []
+    for doc_id, pos, kind, text in spans:
+        if kind != "text" or text is None:
+            continue
+        for p, rgx in compiled:
+            m = rgx.match(text)
+            if m:
+                out.append((doc_id, pos, p, m.group(1), m.group(2)))
+    return sorted(out)
 
 
 def canonical_entity_py(x: str) -> str:
@@ -54,7 +78,7 @@ def run_oracle(
 ):
     """docs: [{doc_id, spans: [{kind,text,media_ref,offset}]}] →
     (kg_triples pdf, kg_groundings pdf)."""
-    compiled = [(p, re.compile(_template_to_pattern(t))) for p, t in templates]
+    compiled = [(p, re.compile(template_to_pattern_py(t))) for p, t in templates]
     kb_entities = {canonical_entity_py(e) for e in kb_entities}
 
     mentions = []  # (doc_id, pos, s, p, o)

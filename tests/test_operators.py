@@ -219,11 +219,22 @@ def test_messy_swap_plan_has_no_global_window(spark):
     assert "SinglePartition" not in plan
 
 
+def _visual_relation_ratio_two_agg(visual_triples, all_triples, min_total):
+    """Reference two-aggregation form of the visual relation ratio
+    (gen_visual_relations.py:16-31): → (p, vis_count, all_count, ratio)."""
+    vis = visual_triples.groupBy("p").agg(F.count("*").alias("vis_count"))
+    alln = all_triples.groupBy("p").agg(F.count("*").alias("all_count"))
+    return (
+        alln.join(vis, "p", "left")
+        .fillna(0, subset=["vis_count"])
+        .filter(F.col("all_count") >= min_total)
+        .withColumn("ratio", F.round(F.col("vis_count") / F.col("all_count"), 4))
+    )
+
+
 def test_visual_ratio_fused_matches_two_agg_form(spark):
     """relation_filter.visual_relation_ratio_fused (one-pass flags agg)
     must emit exactly the rows of the two-aggregation join form."""
-    from pyspark.sql import functions as F
-
     from imgfact_spark.pipeline import entity_filter, relation_filter
 
     cand = spark.createDataFrame(
@@ -239,9 +250,7 @@ def test_visual_ratio_fused_matches_two_agg_form(spark):
     vis_cand = entity_filter.filter_visual_triples(cand, visual)
     want = {
         (r["p"], r["vis_count"], r["all_count"], r["ratio"])
-        for r in relation_filter.visual_relation_ratio(
-            vis_cand, cand, min_total=10
-        ).collect()
+        for r in _visual_relation_ratio_two_agg(vis_cand, cand, min_total=10).collect()
     }
     got = {
         (r["p"], r["vis_count"], r["all_count"], r["ratio"])
