@@ -21,10 +21,10 @@ def st_incremental_kg(spark, sf_dir):
     drained by an AvailableNow foreachBatch run (streaming.
     incremental_extract — per-doc extraction exactly once per document,
     file-source checkpoint skipping already-processed files), then the
-    corpus-global layer recomputes over the append-only logs
-    (incremental_kg_tables).  The final kg_triples must equal the batch
-    pipeline's — certified by the same DuckDB oracle as
-    kg_construct_triples."""
+    corpus-global layer reduces over the append-only logs
+    (incremental_kg_tables, gates committed once per log snapshot).  The
+    final kg_triples must equal the batch pipeline's — certified by the
+    same DuckDB oracle as kg_construct_triples."""
     import shutil
     import tempfile
 

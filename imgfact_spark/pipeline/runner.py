@@ -18,9 +18,11 @@ The dataflow is defined ONCE, as a per-document half
 Both take a stage wrapper ``run_stage(name, compute, partition_by=None,
 shared=False, keep=None)``: ``shared`` marks a fan-out point, ``keep`` the
 columns downstream reads (an uncommitted stage is narrowed to them).
-:func:`run_pipeline` passes one that commits or persists; the incremental
-path (``streaming.incremental_extract`` / ``incremental_kg_tables``) passes
-:func:`lazy_stage`, per micro-batch and over the extraction logs.
+:func:`run_pipeline` passes one that commits or persists;
+``streaming.incremental_extract`` passes :func:`lazy_stage` per
+micro-batch, and ``streaming.incremental_kg_tables`` one that commits only
+the ``shared`` stages (the corpus gates, once per log snapshot) and keeps
+the rest lazy over the extraction logs.
 
 Checkpointing is a granularity knob (``PipelineConfig.checkpoint``):
   * ``"all"``   — every stage is a committed table; a killed job resumes

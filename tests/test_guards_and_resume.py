@@ -160,29 +160,18 @@ def _subset_frame(spark, n=5000):
     )
 
 
-def _jobs_in_group(spark, group, action):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_commit_issues_no_job_beyond_the_write(spark, tmp_path):
+def test_commit_issues_no_job_beyond_the_write(spark, tmp_path, jobs_in_group):
     """The commit marker's counts are read from the written files' footers:
     a store write runs exactly the jobs of the bare partitioned write."""
     df = _subset_frame(spark)
-    bare = _jobs_in_group(
-        spark, "bare_write",
+    bare = jobs_in_group(
+        "bare_write",
         lambda: df.repartition("subset").write.partitionBy("subset")
         .parquet(str(tmp_path / "bare")),
     )
     store = TableStore(str(tmp_path / "store"))
-    committed = _jobs_in_group(
-        spark, "store_write",
+    committed = jobs_in_group(
+        "store_write",
         lambda: store.write(df, "t", partition_by=["subset"]),
     )
     assert bare > 0

@@ -183,6 +183,63 @@ def test_sessionize_stream_matches_batch_across_microbatches(spark, tmp_path):
     assert (7, base, base + 600, 3, 6.0) in emitted
 
 
+_FIRST_BATCH = "doc_id < 'doc_000000060'"
+
+
+def _kg_inputs(spark):
+    """120 synthetic documents, the KB entity union and rel2desc."""
+    docs = synth.synth_documents(spark, 120).cache()
+    kb = synth.kb_df(spark)
+    ents = kb.selectExpr("s as entity").union(kb.selectExpr("o as entity")).distinct()
+    return docs, ents, synth.rel2desc_df(spark)
+
+
+_GROUNDING_COLS = ("s", "p", "o", "media_ref", "doc_id", "score", "rank", "subset")
+
+
+def _kg_rows(triples, groundings):
+    return (
+        sorted(map(tuple, triples.select("s", "p", "o", "n_docs", "subset").collect())),
+        sorted(map(tuple, groundings.select(*_GROUNDING_COLS).collect())),
+    )
+
+
+def _batch_rows(spark, tmp_path, docs, r2d, ents, cfg):
+    """kg rows of ``run_pipeline`` over ``docs``, in a fresh store."""
+    import tempfile
+
+    from imgfact_spark.io import TableStore
+    from imgfact_spark.pipeline.runner import run_pipeline
+
+    store = TableStore(tempfile.mkdtemp(prefix="batch_", dir=tmp_path))
+    res = run_pipeline(spark, docs, r2d, ents, store, cfg, input_fingerprint=store.root)
+    return _kg_rows(res.kg_triples, res.kg_groundings)
+
+
+class _Stream:
+    """A landing directory drained by incremental_extract into its logs."""
+
+    def __init__(self, spark, tmp_path, docs, r2d, ents, cfg):
+        self.spark, self.docs, self.r2d, self.ents, self.cfg = spark, docs, r2d, ents, cfg
+        self.input_dir = str(tmp_path / "ikg_in")
+        self.work_dir = str(tmp_path / "ikg_work")
+        self.ckpt = str(tmp_path / "ikg_ckpt")
+        os.makedirs(self.input_dir, exist_ok=True)
+
+    def land(self, cond):
+        from imgfact_spark.streaming import incremental_extract
+
+        self.docs.filter(cond).write.mode("append").parquet(self.input_dir)
+        incremental_extract(
+            self.spark, self.input_dir, self.work_dir, self.ckpt, self.r2d, self.ents
+        )
+
+    def kg_rows(self):
+        from imgfact_spark.streaming import incremental_kg_tables
+
+        return _kg_rows(*incremental_kg_tables(self.spark, self.work_dir, self.cfg))
+
+
 @pytest.mark.parametrize(
     "model",
     [{}, {"scoring": "checkpoint"}, {"entity_gate": "checkpoint"}],
@@ -190,46 +247,105 @@ def test_sessionize_stream_matches_batch_across_microbatches(spark, tmp_path):
 )
 def test_incremental_kg_matches_batch_pipeline(spark, tmp_path, model):
     """Streaming incremental KG construction == the batch pipeline on the
-    same corpus: docs arrive in two batches, extraction runs once per doc
-    into append logs, and the aggregate layer over the logs reproduces
-    run_pipeline's kg_triples and kg_groundings EXACTLY — under the default
-    config and under each served-model dispatch (xxhash64 hash mode, so the
-    model-mode checkpoints are the ones served)."""
-    import os
+    documents landed so far: docs arrive in two batches, extraction runs
+    once per doc into append logs, and after EACH batch the aggregate layer
+    over the logs reproduces run_pipeline's kg_triples and kg_groundings
+    EXACTLY (gate state committed for the first batch must not survive
+    into the second) — under the default config and under each
+    served-model dispatch (xxhash64 hash mode, so the model-mode
+    checkpoints are the ones served)."""
+    from imgfact_spark.pipeline.runner import PipelineConfig
 
-    from imgfact_spark import synth
-    from imgfact_spark.io import TableStore
-    from imgfact_spark.pipeline.runner import PipelineConfig, run_pipeline
-    from imgfact_spark.streaming import incremental_extract, incremental_kg_tables
-
-    docs = synth.synth_documents(spark, 120).cache()
-    kb = synth.kb_df(spark)
-    ents = kb.selectExpr("s as entity").union(kb.selectExpr("o as entity")).distinct()
-    r2d = synth.rel2desc_df(spark)
+    docs, ents, r2d = _kg_inputs(spark)
     cfg = PipelineConfig(min_evidence=1, checkpoint="final", **model)
+    stream = _Stream(spark, tmp_path, docs, r2d, ents, cfg)
 
-    input_dir = str(tmp_path / "ikg_in")
-    work_dir = str(tmp_path / "ikg_work")
-    ckpt = str(tmp_path / "ikg_ckpt")
-    os.makedirs(input_dir, exist_ok=True)
+    stream.land(_FIRST_BATCH)
+    first = docs.filter(_FIRST_BATCH)
+    assert stream.kg_rows() == _batch_rows(spark, tmp_path, first, r2d, ents, cfg)
 
-    docs.filter("doc_id < 'doc_000000060'").write.mode("append").parquet(input_dir)
-    incremental_extract(spark, input_dir, work_dir, ckpt, r2d, ents)
-    docs.filter("doc_id >= 'doc_000000060'").write.mode("append").parquet(input_dir)
-    incremental_extract(spark, input_dir, work_dir, ckpt, r2d, ents)
+    stream.land(f"NOT ({_FIRST_BATCH})")
+    assert stream.kg_rows() == _batch_rows(spark, tmp_path, docs, r2d, ents, cfg)
 
-    inc_triples, inc_groundings = incremental_kg_tables(spark, work_dir, cfg)
 
-    res = run_pipeline(
-        spark, docs, r2d, ents, TableStore(str(tmp_path / "ikg_batch")), cfg,
-        input_fingerprint="ikg:120",
+def test_incremental_kg_state_reuse_and_invalidation(spark, tmp_path, jobs_in_group):
+    """The corpus gates are committed under kg_state/ once per log snapshot
+    × config: a second call over unchanged logs runs no gate job, only the
+    2 jobs of opening the two logs; a foreachBatch replay (rewritten batch
+    directory) or a changed ``vcc_threshold`` recomputes them, and the
+    tables then equal run_pipeline over the matching input."""
+    from dataclasses import replace
+
+    from imgfact_spark.pipeline.runner import PipelineConfig, document_stages, lazy_stage
+    from imgfact_spark.streaming import incremental_kg_tables
+
+    docs, ents, r2d = _kg_inputs(spark)
+    cfg = PipelineConfig(min_evidence=1, checkpoint="final")
+    stream = _Stream(spark, tmp_path, docs, r2d, ents, cfg)
+    stream.land(_FIRST_BATCH)
+    stream.land(f"NOT ({_FIRST_BATCH})")
+    work = stream.work_dir
+    assert sorted(os.listdir(f"{work}/candidates_log")) == ["batch_id=0", "batch_id=1"]
+
+    def call(group, call_cfg):
+        out = []
+        n = jobs_in_group(group, lambda: out.append(
+            incremental_kg_tables(spark, work, call_cfg)))
+        return n, _kg_rows(*out[0])
+
+    def opened_logs():  # what a call costs when it computes nothing
+        spark.read.parquet(f"{work}/media_log")
+        spark.read.parquet(f"{work}/candidates_log")
+
+    log_jobs = jobs_in_group("ikg_open_logs", opened_logs)
+    computed, rows = call("ikg_first", cfg)
+    reused, rows_again = call("ikg_reuse", cfg)
+    assert computed > reused == log_jobs
+    assert rows_again == rows
+
+    # a replayed foreachBatch rewrites its own directory: same rows, new files
+    replay = document_stages(
+        lazy_stage, docs.filter(f"NOT ({_FIRST_BATCH})"), r2d, ents, cfg
     )
-    bt = sorted(map(tuple, res.kg_triples.select("s", "p", "o", "n_docs", "subset").collect()))
-    it = sorted(map(tuple, inc_triples.select("s", "p", "o", "n_docs", "subset").collect()))
-    assert it == bt
-    bg = sorted(map(tuple, res.kg_groundings.collect()))
-    ig = sorted(map(tuple, inc_groundings.select(*res.kg_groundings.columns).collect()))
-    assert ig == bg
+    replay["candidates"].write.mode("overwrite").parquet(f"{work}/candidates_log/batch_id=1")
+    replayed, rows_replayed = call("ikg_replay", cfg)
+    assert replayed > log_jobs
+    assert rows_replayed == rows == _batch_rows(spark, tmp_path, docs, r2d, ents, cfg)
+
+    strict = replace(cfg, vcc_threshold=0.5)
+    changed, rows_strict = call("ikg_strict", strict)
+    assert changed > log_jobs
+    assert rows_strict != rows
+    assert rows_strict == _batch_rows(spark, tmp_path, docs, r2d, ents, strict)
+
+
+def _scan_roots(df) -> list[str]:
+    """The root path of every file scan in ``df``'s optimized plan, one
+    entry per scan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        paths = leaves.apply(i).relation().location().rootPaths()
+        roots += [paths.apply(j).toString() for j in range(paths.size())]
+    return sorted(roots)
+
+
+def test_incremental_kg_plans_read_committed_gates(spark, tmp_path):
+    """Neither returned frame scans candidates_log: both read the committed
+    whitelist, and kg_groundings scans media_log once, for the grounding
+    join."""
+    from imgfact_spark.pipeline.runner import PipelineConfig
+    from imgfact_spark.streaming import incremental_kg_tables
+
+    docs, ents, r2d = _kg_inputs(spark)
+    cfg = PipelineConfig(min_evidence=1, checkpoint="final")
+    stream = _Stream(spark, tmp_path, docs, r2d, ents, cfg)
+    stream.land(_FIRST_BATCH)
+    triples, groundings = incremental_kg_tables(spark, stream.work_dir, cfg)
+    prefix = "file:" + stream.work_dir + "/"
+    rel = lambda df: [r.removeprefix(prefix) for r in _scan_roots(df)]  # noqa: E731
+    assert rel(triples) == ["kg_state/whitelisted_candidates"]
+    assert rel(groundings) == ["kg_state/whitelisted_candidates", "media_log"]
 
 
 def test_windowed_counts_late_data_cannot_change_finalized_window(spark, tmp_path):
