@@ -7,9 +7,9 @@ neural models whose weights are not in the repo.  Our engine preserves their
 (ptuningfilter.py:16, ptuningfilter_ent.py:32, CPgen.py:369-372) — over a
 deterministic hash-based score so correctness is exactly testable.
 
-``det_score_py`` (numpy/pandas, used inside Arrow-batched pandas UDFs) and
-``det_score_col`` (pure Column via xxhash64) compute THE SAME value, so a
-pipeline stage can use whichever path is faster and tests/oracles agree.
+``det_score_col`` (pure Column via xxhash64) is the engine's scorer.
+``det_score_py`` (numpy/pandas) computes THE SAME value; no UDF uses it —
+it serves only as the test reference that pins ``det_score_col``.
 
 Score definition: ``(xxhash64(concat_ws('|', parts)) mod 10^6) / 10^6``
 folded into [0,1).  xxhash64 seed 42 matches Spark's default pandas hash?  No

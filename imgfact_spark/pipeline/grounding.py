@@ -20,8 +20,9 @@ calibrated into the score ranges real CLIP produces on pair-crawled images,
 so the reference thresholds stay meaningful:
     pair score  = 0.20 + 0.80·u(pair|s|p|o|media_ref)   — ~75% pass 0.4
     entity score = 0.75 + 0.25·u(ent|entity|media_ref)  — ~27% pass both 0.87
-Both are pure Column expressions (xxhash64-based); an equivalent pandas-UDF
-path exists for plugging real models (det_score_py computes identical u).
+Both are pure Column expressions (xxhash64-based).  Model weights plug in
+through ``PipelineConfig(scoring="checkpoint")``, which serves them from a
+checkpoint file (pipeline/model_serving.py).
 """
 
 from __future__ import annotations
@@ -107,84 +108,3 @@ def topk_groundings(filtered: DataFrame, k: int = DEFAULT_TOPK) -> DataFrame:
         tiebreak=["media_ref", "doc_id"],
     )
 
-
-# ---------------------------------------------------------------------------
-# Model-simulation scoring path (performance-profile variant)
-# ---------------------------------------------------------------------------
-
-
-def score_groundings_model_sim(
-    gc, width: int = 256, layers: int = 4, seed: int = 42
-):
-    """Scoring through a deterministic numpy "encoder" whose compute profile
-    resembles a small vision-text scoring head (batch @ width×width matmul
-    stack), instead of the µs hash stand-in.
-
-    The reference's grounding filters run CLIP on every (image, text) pair
-    (ptuningfilter.py:33-47) — GFLOPs per row — so the engine's scaling
-    behavior under a compute-dominated kernel is the representative one.
-    Outputs are deterministic pure functions of (s,p,o,media_ref) — the
-    6-decimal round absorbs BLAS batch-shape ulps, making scores stable
-    across partitionings/runs — but follow the encoder's score
-    distribution, not the calibrated-uniform one; use the default column
-    path for oracle-matched decisions.
-
-    Shape: a SCALAR Arrow-batched pandas UDF over only the four key
-    columns, returning a struct of the three scores — every other gc
-    column stays JVM-side instead of round-tripping through the Python
-    worker (the mapInPandas form shipped full rows both ways; measured
-    ~2× Arrow traffic on a wide gc).  Per batch ONE vectorized hash per
-    score key, sinusoidal expansion to ``width`` dims, ``layers`` tanh
-    matmuls (BLAS), logistic readout.  No per-row Python.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    rng = np.random.RandomState(seed)
-    planes = [
-        (rng.standard_normal((width, width)) / np.sqrt(width)).astype("float64")
-        for _ in range(layers)
-    ]
-    readout = rng.standard_normal(width).astype("float64") / np.sqrt(width)
-    freqs = (rng.uniform(0.5, 2.0, width) * 2 * np.pi).astype("float64")
-
-    def encode(keys: "pd.Series") -> "np.ndarray":
-        h = pd.util.hash_pandas_object(keys, index=False).to_numpy()
-        base = (h % np.uint64(2**31)).astype("float64") / float(2**31)
-        x = np.sin(np.outer(base, freqs))
-        for w in planes:
-            x = np.tanh(x @ w)
-        z = x @ readout
-        return 1.0 / (1.0 + np.exp(-3.0 * z))
-
-    def _scores(s, p, o, media_ref):
-        pair_key = "pair|" + s + "|" + p + "|" + o + "|" + media_ref
-        s_key = "ent|" + s + "|" + media_ref
-        o_key = "ent|" + o + "|" + media_ref
-        return pd.DataFrame(
-            {
-                "score": np.round(encode(pair_key), 6),
-                "score_s": np.round(0.75 + 0.25 * encode(s_key), 6),
-                "score_o": np.round(0.75 + 0.25 * encode(o_key), 6),
-            }
-        )
-
-    # real annotations (module uses `from __future__ import annotations`,
-    # which breaks pandas_udf type-hint inference — CLAUDE.md)
-    _scores.__annotations__ = {
-        "s": pd.Series, "p": pd.Series, "o": pd.Series,
-        "media_ref": pd.Series, "return": pd.DataFrame,
-    }
-    struct = T.StructType(
-        [
-            T.StructField("score", T.DoubleType()),
-            T.StructField("score_s", T.DoubleType()),
-            T.StructField("score_o", T.DoubleType()),
-        ]
-    )
-    scores_udf = pandas_udf(_scores, returnType=struct)
-    return gc.withColumn(
-        "_ms", scores_udf("s", "p", "o", "media_ref")
-    ).select(*gc.columns, "_ms.score", "_ms.score_s", "_ms.score_o")

@@ -12,13 +12,20 @@ file rides the executor's local disk / DFS cache, exactly how real
 multi-GB CLIP weights have to travel; a closed-over numpy array would be
 pickled into every task instead).
 
+Every model kernel is the same small sinusoidal MLP — key hash → unit
+scalar → sinusoidal features → ``layers`` tanh matmuls (BLAS) — defined
+once here: :func:`_mlp_weights` draws the weights, :func:`_tower` runs the
+forward pass, :func:`_save_npz` writes the checkpoint atomically.  Its
+compute profile resembles a small vision-text scoring head (batch @
+width×width matmul stack) rather than the µs hash stand-in, which is the
+representative one for a CLIP-class kernel.
+
 Two checkpoint flavors share the loading contract:
 
-* ``mode="model"`` — stores the sinusoidal-encoder weights (planes, readout,
-  freqs) of :func:`~imgfact_spark.pipeline.grounding.score_groundings_model_sim`;
-  scores are bit-identical to that closed-over-planes path (pinned by
-  ``tests/test_model_serving.py``), proving the serving path is a pure
-  refactor of where the weights live.
+* ``mode="model"`` — stores the encoder weights (planes, readout, freqs);
+  scores follow the encoder's distribution, not the calibrated-uniform
+  one.  ``tests/oracle.py`` holds a closed-over reference that draws the
+  same weights from (width, layers, seed) and pins the served scores to it.
 * ``mode="md5"`` — stores only the affine calibration head (pair_lo/span,
   ent_lo/span) and computes the md5-mode deterministic score
   (functions/scoring.det_score_col semantics) in the Python worker, making
@@ -49,6 +56,75 @@ SCORE_STRUCT = T.StructType(
 )
 
 
+# ---------------------------------------------------------------------------
+# The MLP every kernel serves: weights, forward pass, checkpoint file
+# ---------------------------------------------------------------------------
+
+
+def _mlp_weights(
+    seed: int, width: int, layers: int, towers=("planes",), readout: bool = True
+) -> dict:
+    """Draw one checkpoint's weights from ``seed``: ``layers`` width×width
+    planes per tower, then the readout vector, then the sinusoidal
+    frequencies.  The draw order fixes the values in the cached ``_v1``
+    default files, so it must not change."""
+    rng = np.random.RandomState(seed)
+    arrays = {
+        tower: np.stack(
+            [rng.standard_normal((width, width)) / np.sqrt(width) for _ in range(layers)]
+        )
+        for tower in towers
+    }
+    if readout:
+        arrays["readout"] = rng.standard_normal(width) / np.sqrt(width)
+    arrays["freqs"] = rng.uniform(0.5, 2.0, width) * 2 * np.pi
+    return arrays
+
+
+def _tower(keys: pd.Series, freqs: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """The forward pass: hash → unit scalar → sinusoidal features, then
+    ``tanh(x @ w)`` per plane.  One definition, so the bit-sensitive lift
+    cannot drift between kernels."""
+    h = pd.util.hash_pandas_object(keys, index=False).to_numpy()
+    base = (h % np.uint64(2**31)).astype("float64") / float(2**31)
+    x = np.sin(np.outer(base, freqs))
+    for w in planes:
+        x = np.tanh(x @ w)
+    return x
+
+
+def _sigmoid(z: np.ndarray) -> np.ndarray:
+    return 1.0 / (1.0 + np.exp(-3.0 * z))
+
+
+def _encode(keys: pd.Series, weights: dict) -> np.ndarray:
+    """Single-tower score in (0, 1): forward pass, then logistic readout."""
+    return _sigmoid(_tower(keys, weights["freqs"], weights["planes"]) @ weights["readout"])
+
+
+def _save_npz(path: str, **arrays) -> str:
+    # np.savez appends ".npz" to names lacking the suffix — keep it on the
+    # temp name so the atomic replace sees the file savez actually wrote
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp.npz"
+    np.savez(tmp, **arrays)
+    os.replace(tmp, path)
+    return path
+
+
+def _load_npz(path: str, kernel: "str | None" = None) -> dict:
+    """Every array of a checkpoint; ``kernel`` checks its kernel tag, so
+    loading another kernel's file fails instead of scoring wrongly."""
+    with np.load(path) as z:
+        if kernel is not None and str(z["kernel"]) != kernel:
+            raise ValueError(f"not a {kernel} checkpoint: {path}")
+        return {name: z[name] for name in z.files}
+
+
+# ---------------------------------------------------------------------------
+# M2/M3 grounding scorers
+# ---------------------------------------------------------------------------
+
+
 def save_scorer_checkpoint(
     path: str,
     mode: str = "md5",
@@ -60,32 +136,14 @@ def save_scorer_checkpoint(
     ent_lo: float = 0.75,
     ent_span: float = 0.25,
 ) -> str:
-    """Serialize a scorer checkpoint to ``path`` (.npz), atomically.
-
-    ``mode="model"`` materializes the SAME weights score_groundings_model_sim
-    constructs from its seed (grounding.py:145-151), so the serving path can
-    be asserted bit-identical to the closed-over path.
-    """
-    arrays = {
-        "mode": np.array(mode),
-        "calib": np.array([pair_lo, pair_span, ent_lo, ent_span], dtype="float64"),
-    }
-    if mode == "model":
-        rng = np.random.RandomState(seed)
-        arrays["planes"] = np.stack(
-            [
-                (rng.standard_normal((width, width)) / np.sqrt(width)).astype("float64")
-                for _ in range(layers)
-            ]
-        )
-        arrays["readout"] = rng.standard_normal(width).astype("float64") / np.sqrt(width)
-        arrays["freqs"] = (rng.uniform(0.5, 2.0, width) * 2 * np.pi).astype("float64")
-    # np.savez appends ".npz" to names lacking the suffix — keep it on the
-    # temp name so the atomic replace sees the file savez actually wrote
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp.npz"
-    np.savez(tmp, **arrays)
-    os.replace(tmp, path)
-    return path
+    """Serialize a scorer checkpoint to ``path`` (.npz), atomically."""
+    weights = _mlp_weights(seed, width, layers) if mode == "model" else {}
+    return _save_npz(
+        path,
+        mode=np.array(mode),
+        calib=np.array([pair_lo, pair_span, ent_lo, ent_span], dtype="float64"),
+        **weights,
+    )
 
 
 def default_checkpoint_path(mode: str = "md5") -> str:
@@ -112,24 +170,9 @@ class _LoadedScorer:
     """The deserialized checkpoint: scores one (s,p,o,media_ref) batch."""
 
     def __init__(self, path: str):
-        with np.load(path) as z:
-            self.mode = str(z["mode"])
-            self.pair_lo, self.pair_span, self.ent_lo, self.ent_span = z["calib"]
-            if self.mode == "model":
-                self.planes = [w for w in z["planes"]]
-                self.readout = z["readout"]
-                self.freqs = z["freqs"]
-
-    def _encode(self, keys: pd.Series) -> np.ndarray:
-        # bit-identical to grounding.score_groundings_model_sim.encode;
-        # the hash→sin lift is the shared _encode_base (one definition —
-        # the M1/M4 kernels use the same one, so the bit-sensitive lift
-        # cannot drift between serving paths)
-        x = _encode_base(keys, self.freqs)
-        for w in self.planes:
-            x = np.tanh(x @ w)
-        z = x @ self.readout
-        return 1.0 / (1.0 + np.exp(-3.0 * z))
+        self.weights = _load_npz(path)
+        self.mode = str(self.weights["mode"])
+        self.pair_lo, self.pair_span, self.ent_lo, self.ent_span = self.weights["calib"]
 
     def score_batch(
         self, s: pd.Series, p: pd.Series, o: pd.Series, media_ref: pd.Series
@@ -138,11 +181,14 @@ class _LoadedScorer:
         s_key = "ent|" + s + "|" + media_ref
         o_key = "ent|" + o + "|" + media_ref
         if self.mode == "model":
+            # the 6-decimal round absorbs BLAS batch-shape ulps, so scores
+            # are stable across partitionings and runs
+            w = self.weights
             return pd.DataFrame(
                 {
-                    "score": np.round(self._encode(pair_key), 6),
-                    "score_s": np.round(0.75 + 0.25 * self._encode(s_key), 6),
-                    "score_o": np.round(0.75 + 0.25 * self._encode(o_key), 6),
+                    "score": np.round(_encode(pair_key, w), 6),
+                    "score_s": np.round(0.75 + 0.25 * _encode(s_key, w), 6),
+                    "score_o": np.round(0.75 + 0.25 * _encode(o_key, w), 6),
                 }
             )
         return pd.DataFrame(
@@ -172,10 +218,9 @@ def score_groundings_checkpoint(
     checkpoint_path: str,
     load_marker_dir: "str | None" = None,
 ) -> DataFrame:
-    """Drop-in for grounding.score_groundings / score_groundings_model_sim
-    with the weights served from ``checkpoint_path`` instead of closed-over
-    constants.  Only the four key columns cross the Arrow boundary; every
-    other gc column stays JVM-side."""
+    """Drop-in for grounding.score_groundings with the weights served from
+    ``checkpoint_path``.  Only the four key columns cross the Arrow
+    boundary; every other gc column stays JVM-side."""
     udf = checkpoint_scores_udf(checkpoint_path, load_marker_dir)
     scored = gc.withColumn("_ms", udf("s", "p", "o", "media_ref"))
     return scored.select(*gc.columns, "_ms.score", "_ms.score_s", "_ms.score_o")
@@ -226,21 +271,8 @@ def save_vcc_checkpoint(
     pattern) whose scores the numpy twin :func:`vcc_scores_numpy` replays
     bit-for-bit driver-side.
     """
-    arrays = {"kernel": np.array("vcc"), "mode": np.array(mode)}
-    if mode == "model":
-        rng = np.random.RandomState(seed)
-        arrays["planes"] = np.stack(
-            [
-                (rng.standard_normal((width, width)) / np.sqrt(width)).astype("float64")
-                for _ in range(layers)
-            ]
-        )
-        arrays["readout"] = rng.standard_normal(width).astype("float64") / np.sqrt(width)
-        arrays["freqs"] = (rng.uniform(0.5, 2.0, width) * 2 * np.pi).astype("float64")
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp.npz"
-    np.savez(tmp, **arrays)
-    os.replace(tmp, path)
-    return path
+    weights = _mlp_weights(seed, width, layers) if mode == "model" else {}
+    return _save_npz(path, kernel=np.array("vcc"), mode=np.array(mode), **weights)
 
 
 def save_cp_checkpoint(
@@ -257,23 +289,12 @@ def save_cp_checkpoint(
     sigmoid(dot(enc_txt(key), enc_img(key)) / sqrt(width)).  md5 mode
     serves the cross-engine unit score of the joint candidate key.
     """
-    arrays = {"kernel": np.array("cp"), "mode": np.array(mode)}
-    if mode == "model":
-        rng = np.random.RandomState(seed)
-        for tower in ("txt", "img"):
-            arrays[f"planes_{tower}"] = np.stack(
-                [
-                    (rng.standard_normal((width, width)) / np.sqrt(width)).astype(
-                        "float64"
-                    )
-                    for _ in range(layers)
-                ]
-            )
-        arrays["freqs"] = (rng.uniform(0.5, 2.0, width) * 2 * np.pi).astype("float64")
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp.npz"
-    np.savez(tmp, **arrays)
-    os.replace(tmp, path)
-    return path
+    weights = (
+        _mlp_weights(seed, width, layers, towers=("planes_txt", "planes_img"), readout=False)
+        if mode == "model"
+        else {}
+    )
+    return _save_npz(path, kernel=np.array("cp"), mode=np.array(mode), **weights)
 
 
 def default_vcc_checkpoint_path(mode: str = "md5") -> str:
@@ -290,34 +311,17 @@ def default_cp_checkpoint_path(mode: str = "md5") -> str:
     return path
 
 
-def _encode_base(keys: pd.Series, freqs: np.ndarray) -> np.ndarray:
-    """Shared key→feature lift: hash → unit scalar → sinusoidal features."""
-    h = pd.util.hash_pandas_object(keys, index=False).to_numpy()
-    base = (h % np.uint64(2**31)).astype("float64") / float(2**31)
-    return np.sin(np.outer(base, freqs))
-
-
 class _LoadedVcc:
     """Deserialized M1 checkpoint: scores one entity batch."""
 
     def __init__(self, path: str):
-        with np.load(path) as z:
-            if str(z["kernel"]) != "vcc":
-                raise ValueError(f"not a vcc checkpoint: {path}")
-            self.mode = str(z["mode"])
-            if self.mode == "model":
-                self.planes = [w for w in z["planes"]]
-                self.readout = z["readout"]
-                self.freqs = z["freqs"]
+        self.weights = _load_npz(path, "vcc")
+        self.mode = str(self.weights["mode"])
 
     def score_batch(self, entity: pd.Series) -> pd.DataFrame:
         key = "vcc|" + entity
         if self.mode == "model":
-            x = _encode_base(key, self.freqs)
-            for w in self.planes:
-                x = np.tanh(x @ w)
-            z = x @ self.readout
-            score = 1.0 / (1.0 + np.exp(-3.0 * z))
+            score = _encode(key, self.weights)
         else:
             score = _md5_u(key)
         return pd.DataFrame({"vcc_score": np.asarray(score, dtype="float64")})
@@ -327,31 +331,20 @@ class _LoadedCp:
     """Deserialized M4 checkpoint: scores one candidate batch."""
 
     def __init__(self, path: str):
-        with np.load(path) as z:
-            if str(z["kernel"]) != "cp":
-                raise ValueError(f"not a cp checkpoint: {path}")
-            self.mode = str(z["mode"])
-            if self.mode == "model":
-                self.planes_txt = [w for w in z["planes_txt"]]
-                self.planes_img = [w for w in z["planes_img"]]
-                self.freqs = z["freqs"]
-
-    def _tower(self, keys: pd.Series, planes: list) -> np.ndarray:
-        x = _encode_base(keys, self.freqs)
-        for w in planes:
-            x = np.tanh(x @ w)
-        return x
+        self.weights = _load_npz(path, "cp")
+        self.mode = str(self.weights["mode"])
 
     def score_batch(
         self, s: pd.Series, p: pd.Series, o: pd.Series, media_ref: pd.Series
     ) -> pd.DataFrame:
         if self.mode == "model":
-            cls_txt = self._tower("cp_txt|" + s + "|" + p + "|" + o, self.planes_txt)
-            cls_img = self._tower("cp_img|" + media_ref, self.planes_img)
+            w = self.weights
+            cls_txt = _tower("cp_txt|" + s + "|" + p + "|" + o, w["freqs"], w["planes_txt"])
+            cls_img = _tower("cp_img|" + media_ref, w["freqs"], w["planes_img"])
             dots = np.einsum("ij,ij->i", cls_txt, cls_img) / np.sqrt(
                 cls_txt.shape[1]
             )
-            score = 1.0 / (1.0 + np.exp(-3.0 * dots))
+            score = _sigmoid(dots)
         else:
             score = _md5_u("cp|" + s + "|" + p + "|" + o + "|" + media_ref)
         return pd.DataFrame({"cp_score": np.asarray(score, dtype="float64")})
@@ -381,7 +374,13 @@ def cp_scores_numpy(
 
 def _iter_udf(loader, struct, checkpoint_path: str, load_marker_dir, n_cols: int):
     """Shared SCALAR_ITER construction: load once per partition iterator,
-    then serve every Arrow batch (the inference.py:160-176 worker shape)."""
+    then serve every Arrow batch (the inference.py:160-176 worker shape).
+
+    The UDF is marked nondeterministic so the optimizer evaluates it once
+    per input row: a deterministic one is inlined into the threshold
+    filters above it and pushed down, and ``ExtractPythonUDFs`` then plans
+    it 2–3 times (once inside each pushed filter, once for the survivors).
+    Its scores stay a pure function of the checkpoint and the key."""
 
     def serve(batches):
         kernel = loader(checkpoint_path)  # per-partition init
@@ -404,7 +403,7 @@ def _iter_udf(loader, struct, checkpoint_path: str, load_marker_dir, n_cols: int
         else Iterator[Tuple[tuple([pd.Series] * n_cols)]],
         "return": Iterator[pd.DataFrame],
     }
-    return pandas_udf(serve, returnType=struct)
+    return pandas_udf(serve, returnType=struct).asNondeterministic()
 
 
 def score_entities_checkpoint(

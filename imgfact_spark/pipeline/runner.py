@@ -48,6 +48,15 @@ from imgfact_spark.pipeline import canonicalize as canon
 from imgfact_spark.pipeline import entity_filter, extract, grounding, ingest, relation_filter
 
 
+#: The allowed values of PipelineConfig's enumerated fields.
+_CHOICES = {
+    "checkpoint": ("all", "final"),
+    "scoring": ("column", "checkpoint"),
+    "entity_gate": ("column", "checkpoint"),
+    "hash_mode": ("xxhash64", "md5"),
+}
+
+
 @dataclass
 class PipelineConfig:
     min_evidence: int = 1        # reference: 10 (entity_filtering/dataloading.py:21)
@@ -60,9 +69,9 @@ class PipelineConfig:
     use_lsh_aliases: bool = False  # char-LSH alias edges (slow on tiny data)
     n_subset_partitions: int = 30
     checkpoint: str = "all"       # "all" | "final"
-    # "column" (hash stand-in) | "model_sim" (numpy kernel) | "checkpoint"
-    # (weights served from an executor-loaded .npz via iterator pandas UDF —
-    # the real-model contract; see pipeline/model_serving.py)
+    # "column" (hash stand-in) | "checkpoint" (weights served from an
+    # executor-loaded .npz via iterator pandas UDF — the real-model
+    # contract; see pipeline/model_serving.py)
     scoring: str = "column"
     scorer_checkpoint: str | None = None  # .npz path for scoring="checkpoint"
     # M1 entity gate: "column" (hash stand-in) | "checkpoint" (VCC weights
@@ -73,6 +82,16 @@ class PipelineConfig:
     vcc_checkpoint: str | None = None  # .npz path for entity_gate="checkpoint"
     hash_mode: str = "xxhash64"   # "xxhash64" | "md5" (cross-engine oracle mode)
     broadcast_entity_dims: bool = True  # hint entity-scaled dims (off at web scale)
+
+    def __post_init__(self):
+        # every dispatch on these fields has a fallback branch, so an
+        # unknown value would otherwise run that branch silently
+        for name, allowed in _CHOICES.items():
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"PipelineConfig.{name}={getattr(self, name)!r}: "
+                    f"expected one of {', '.join(map(repr, allowed))}"
+                )
 
 
 #: PipelineConfig fields that cannot affect stage CONTENTS (only plan shape
@@ -126,7 +145,7 @@ def run_pipeline(
     scans it.  Disable when the input is already a stable table scan.
     """
     cfg = cfg or PipelineConfig()
-    input_fp = input_fingerprint or fingerprint_df(documents.select("doc_id"))
+    input_fp = input_fingerprint or fingerprint_df(documents)
     # Stage identity = input × config: re-running with changed thresholds /
     # topk / scoring must NOT resume from tables computed under the old
     # config.  Plan-only knobs (checkpoint granularity, broadcast hints)
@@ -245,9 +264,7 @@ def kg_stages(
 
     def _groundings():
         gc = grounding.grounding_candidates(wl_cand, media)
-        if cfg.scoring == "model_sim":
-            scored = grounding.score_groundings_model_sim(gc)
-        elif cfg.scoring == "checkpoint":
+        if cfg.scoring == "checkpoint":
             from imgfact_spark.pipeline import model_serving
 
             # md5-mode default checkpoint scores identically to the

@@ -131,9 +131,10 @@ def incremental_kg_tables(spark: SparkSession, work_dir: str, cfg=None):
     stage stays lazy, so the returned frames read ``kg_state`` (never
     ``candidates_log``) and ``media_log`` for the grounding join.  They stay
     valid until the next call on the same ``work_dir``, which may overwrite
-    the state they read.  Correctness note: distinct-media evidence
-    composes across batches because media_refs are globally unique per
-    document occurrence (new docs bring new refs).
+    the state they read.  Correctness note: media_refs are NOT unique per
+    document (one image path recurs across documents), so evidence does not
+    add up batch by batch; the gates recount distinct refs over the whole
+    log on every recompute.
     """
     import hashlib
 
@@ -148,8 +149,16 @@ def incremental_kg_tables(spark: SparkSession, work_dir: str, cfg=None):
     )
 
     cfg = cfg or PipelineConfig()
-    media = spark.read.parquet(f"{work_dir}/media_log").select(*MEDIA_COLS)
-    candidates = spark.read.parquet(f"{work_dir}/candidates_log").select(*CANDIDATE_COLS)
+
+    def open_log(name, cols):
+        # a pinned schema (every log column is a string; batch_id is the
+        # batch directory's partition value) lists the files on the driver
+        # without the schema-inference job an unpinned read runs per log
+        schema = ", ".join(f"{c} string" for c in cols) + ", batch_id int"
+        return spark.read.schema(schema).parquet(f"{work_dir}/{name}").select(*cols)
+
+    media = open_log("media_log", MEDIA_COLS)
+    candidates = open_log("candidates_log", CANDIDATE_COLS)
     files = "\n".join(sorted(media.inputFiles() + candidates.inputFiles()))
     fp = f"{hashlib.md5(files.encode()).hexdigest()[:16]}:{_config_fingerprint(cfg)}"
     state = TableStore(f"{work_dir}/kg_state")

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
 
 from imgfact_spark.functions.scoring import _MOD, _to_signed, xxh64
@@ -148,6 +149,37 @@ def run_oracle(
         else pd.DataFrame(columns=["s", "p", "o", "n_docs"])
     )
     return tdf, gdf
+
+
+def model_scores_py(
+    s: pd.Series, p: pd.Series, o: pd.Series, media_ref: pd.Series,
+    width: int = 256, layers: int = 4, seed: int = 42,
+) -> pd.DataFrame:
+    """Closed-over reference for the served ``mode="model"`` grounding
+    scorer (pipeline/model_serving.py): the weights are drawn here from
+    (width, layers, seed) — planes, readout, freqs, in that order — instead
+    of being read from a checkpoint file, and the encoder is written out
+    again, so a drift in the file format or in the served forward pass
+    shows up as a score mismatch.  → (score, score_s, score_o)"""
+    rng = np.random.RandomState(seed)
+    planes = [rng.standard_normal((width, width)) / np.sqrt(width) for _ in range(layers)]
+    readout = rng.standard_normal(width) / np.sqrt(width)
+    freqs = rng.uniform(0.5, 2.0, width) * 2 * np.pi
+
+    def encode(keys: pd.Series) -> np.ndarray:
+        h = pd.util.hash_pandas_object(keys, index=False).to_numpy()
+        x = np.sin(np.outer((h % np.uint64(2**31)).astype("float64") / float(2**31), freqs))
+        for w in planes:
+            x = np.tanh(x @ w)
+        return 1.0 / (1.0 + np.exp(-3.0 * (x @ readout)))
+
+    return pd.DataFrame(
+        {
+            "score": np.round(encode("pair|" + s + "|" + p + "|" + o + "|" + media_ref), 6),
+            "score_s": np.round(0.75 + 0.25 * encode("ent|" + s + "|" + media_ref), 6),
+            "score_o": np.round(0.75 + 0.25 * encode("ent|" + o + "|" + media_ref), 6),
+        }
+    )
 
 
 def redact_pii_py(text: str) -> str:

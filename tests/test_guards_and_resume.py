@@ -151,6 +151,42 @@ def test_config_fingerprint_is_stable():
     assert _config_fingerprint(PipelineConfig()) == "9c8d876b77e4"
 
 
+@pytest.mark.parametrize(
+    "field,value",
+    [
+        ("scoring", "model_sim"),
+        ("scoring", "Column"),
+        ("entity_gate", "md5"),
+        ("checkpoint", "none"),
+        ("hash_mode", "xxhash32"),
+    ],
+)
+def test_config_rejects_unknown_values(field, value):
+    """Every dispatch on an enumerated field has a fallback branch, so an
+    unknown value is refused up front instead of silently running that
+    branch (``scoring="model_sim"`` names a deleted scorer)."""
+    with pytest.raises(ValueError, match=rf"PipelineConfig\.{field}="):
+        PipelineConfig(**{field: value})
+
+
+def test_default_fingerprint_sees_document_content(spark, tmp_path):
+    """Without an ``input_fingerprint`` the resume key is a content hash of
+    the documents: the same doc_ids with every span removed must recompute
+    (0 triples), not resume the first run's tables."""
+    from pyspark.sql import functions as F
+
+    docs = synth.synth_documents(spark, 300).cache()
+    kb = synth.kb_df(spark)
+    ents = kb.selectExpr("s as entity").union(kb.selectExpr("o as entity")).distinct()
+    r2d = synth.rel2desc_df(spark)
+    store = TableStore(str(tmp_path / "store"))
+    cfg = PipelineConfig(checkpoint="final")
+    assert run_pipeline(spark, docs, r2d, ents, store, cfg).kg_triples.count() > 0
+    emptied = docs.withColumn("spans", F.expr("filter(spans, x -> false)"))
+    assert run_pipeline(spark, emptied, r2d, ents, store, cfg).kg_triples.count() == 0
+    docs.unpersist()
+
+
 def _subset_frame(spark, n=5000):
     """24 letter subsets plus a NULL one and one that needs path escaping."""
     return spark.range(n).selectExpr(

@@ -147,6 +147,38 @@ def test_checkpoint_scoring_ships_only_key_columns_through_arrow(spark):
     assert "wide_payload_col" not in line
 
 
+def test_model_scorers_evaluate_once_per_row(spark):
+    """Each served model scorer is planned as exactly ONE ArrowEvalPython:
+    the threshold filters above a (deterministic) scoring UDF would be
+    pushed down with the UDF inlined, planning it 2-3 times per row.  The
+    count is taken on plans that have not run — once AQE has run a plan,
+    its string also prints the initial plan."""
+    from imgfact_spark import synth
+    from imgfact_spark.pipeline.runner import (
+        PipelineConfig,
+        document_stages,
+        kg_stages,
+        lazy_stage,
+    )
+
+    docs = synth.synth_documents(spark, 40)
+    kb = synth.kb_df(spark)
+    ents = kb.selectExpr("s as entity").union(kb.selectExpr("o as entity")).distinct()
+    per_doc = document_stages(
+        lazy_stage, docs, synth.rel2desc_df(spark), ents, PipelineConfig()
+    )
+
+    def n_udf_nodes(stage, **cfg):
+        out = kg_stages(
+            lazy_stage, per_doc["media"], per_doc["candidates"],
+            PipelineConfig(checkpoint="final", **cfg),
+        )
+        return _executed(out[stage]).count("ArrowEvalPython")
+
+    assert n_udf_nodes("groundings", scoring="checkpoint") == 1
+    assert n_udf_nodes("visual_entities", entity_gate="checkpoint") == 1
+
+
 def test_duplicate_passage_plans(spark):
     """The passage-dedup family's scale invariants: gram construction is
     materialized once behind the snapshot (never re-derived per consumer),

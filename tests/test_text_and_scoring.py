@@ -269,12 +269,21 @@ def test_gopher_rules_spark_matches_python_twin(spark):
         assert g == gopher_rules_py(txt), (txt[:60], g, gopher_rules_py(txt))
 
 
-def test_model_sim_scorer_partition_deterministic(spark):
-    """score_groundings_model_sim (M2/M3 numpy stand-in) is a pure function
-    of (s,p,o,media_ref): identical scores regardless of partitioning, all
-    non-key columns pass through JVM-side, scores in (0,1]."""
-    from imgfact_spark.pipeline.grounding import score_groundings_model_sim
+def test_checkpoint_scorer_partition_deterministic(spark):
+    """The served default model checkpoint (M2/M3 grounding scorer) is a
+    pure function of (s,p,o,media_ref): identical scores regardless of
+    partitioning, all non-key columns pass through JVM-side, scores in
+    (0,1], and equal to the closed-over reference at the default width-256,
+    4-layer, seed-42 weights."""
+    import pandas as pd
 
+    from imgfact_spark.pipeline.model_serving import (
+        default_checkpoint_path,
+        score_groundings_checkpoint,
+    )
+    from tests.oracle import model_scores_py
+
+    ckpt = default_checkpoint_path("model")
     rows = [
         (f"d{i}", f"s{i % 7}", f"p{i % 3}", f"o{i % 5}", f"img://x/{i}", "TL001")
         for i in range(500)
@@ -282,14 +291,21 @@ def test_model_sim_scorer_partition_deterministic(spark):
     df = spark.createDataFrame(
         rows, "doc_id string, s string, p string, o string, media_ref string, subset string"
     )
-    a = score_groundings_model_sim(df.repartition(1)).orderBy("doc_id").collect()
-    b = score_groundings_model_sim(df.repartition(13)).orderBy("doc_id").collect()
+    a = score_groundings_checkpoint(df.repartition(1), ckpt).orderBy("doc_id").collect()
+    b = score_groundings_checkpoint(df.repartition(13), ckpt).orderBy("doc_id").collect()
     assert [r.asDict() for r in a] == [r.asDict() for r in b]
     assert set(a[0].asDict()) == {
         "doc_id", "s", "p", "o", "media_ref", "subset",
         "score", "score_s", "score_o",
     }
     assert all(0.0 < r.score <= 1.0 and 0.0 < r.score_s <= 1.0 for r in a)
+    # exact, not approx: the 6-decimal round on both sides absorbs BLAS
+    # batch-shape ulps (see test_model_serving)
+    ser = lambda c: pd.Series([r[c] for r in a], dtype="object")  # noqa: E731
+    want = model_scores_py(ser("s"), ser("p"), ser("o"), ser("media_ref"))
+    assert [(r.score, r.score_s, r.score_o) for r in a] == list(
+        want.itertuples(index=False, name=None)
+    )
     # same key -> same score regardless of the surrounding rows
     by_key = {}
     for r in a:

@@ -76,25 +76,25 @@ def worker(cpus: int, docs_path: str, reps: int, profile: str = "fast",
     )
     if profile == "kernel":
         docs = spark.read.parquet(docs_path)
-        # Fixed-work CPU-bound variant: ONLY the model-sim scoring stage
-        # (the pipeline's compute kernel) over the pre-materialized
-        # candidates-shaped table — isolates engine CPU scaling from the
-        # host's ~2 GB/s shared-memory-bandwidth ceiling that caps the
+        # Fixed-work CPU-bound variant: ONLY the model scoring stage (the
+        # pipeline's compute kernel, served from the default model
+        # checkpoint) over the pre-materialized candidates-shaped table —
+        # isolates engine CPU scaling from the host's ~2 GB/s
+        # shared-memory-bandwidth ceiling that caps the
         # shuffle/persist-heavy full pipeline.
         import time as _t
 
-        from pyspark.sql import functions as F
-
-        from imgfact_spark.pipeline.grounding import (
-            filter_groundings,
-            score_groundings_model_sim,
+        from imgfact_spark.pipeline.grounding import filter_groundings
+        from imgfact_spark.pipeline.model_serving import (
+            default_checkpoint_path,
+            score_groundings_checkpoint,
         )
 
         best = None
         n_out = 0
         for _ in range(reps):
             t0 = _t.time()
-            scored = score_groundings_model_sim(docs)
+            scored = score_groundings_checkpoint(docs, default_checkpoint_path("model"))
             n_out = filter_groundings(scored, 0.3, 0.3).count()
             dt = _t.time() - t0
             best = dt if best is None else min(best, dt)
@@ -112,7 +112,7 @@ def worker(cpus: int, docs_path: str, reps: int, profile: str = "fast",
             spark, spark.read.parquet(path), r2d, ents, store,
             PipelineConfig(
                 min_evidence=1, checkpoint="final",
-                scoring="model_sim" if profile == "model" else "column",
+                scoring="checkpoint" if profile == "model" else "column",
             ),
             input_fingerprint=f"scaling:{path}",
             materialize_input=False,

@@ -41,7 +41,7 @@ def main() -> int:
     ap.add_argument("--input-fingerprint", default=None,
                     help="input identity for resume (Iceberg snapshot id etc.)")
     ap.add_argument("--checkpoint", default="all", choices=["all", "final"])
-    ap.add_argument("--scoring", default="column", choices=["column", "model_sim"])
+    ap.add_argument("--scoring", default="column", choices=["column", "checkpoint"])
     ap.add_argument("--min-evidence", type=int, default=10,
                     help="reference default 10 (entity_filtering/dataloading.py:21)")
     ap.add_argument("--topk", type=int, default=10)
